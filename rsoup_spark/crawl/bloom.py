@@ -29,12 +29,18 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
+    BooleanType,
+    ByteType,
+    DoubleType,
+    FloatType,
     IntegerType,
     LongType,
+    ShortType,
+    StringType,
     StructField,
     StructType,
 )
@@ -113,6 +119,44 @@ def empty_shards(spark, n_shards: int, m_bits: int) -> DataFrame:
     return spark.createDataFrame(rows, SHARD_SCHEMA)
 
 
+def shard_row_placeholders(schema: StructType) -> dict:
+    """A non-null stand-in value per candidate column, for the one
+    shard-state row a shard pass emits next to its candidate rows (that
+    row is filtered out of the candidate output by its ``__blob``)."""
+    zero = {IntegerType: 0, LongType: 0, ShortType: 0, ByteType: 0,
+            DoubleType: 0.0, FloatType: 0.0, BooleanType: False,
+            StringType: "", BinaryType: b""}
+    return {f.name: zero.get(type(f.dataType)) for f in schema.fields}
+
+
+def shard_pass_schema(candidates: StructType, state: list) -> StructType:
+    """Output schema of a shard pass: the candidate columns, the
+    ``__unseen`` flag, and the nullable shard-state columns ``state``
+    (set only on the shard row).  A candidate column with no
+    placeholder value becomes nullable."""
+    ph = shard_row_placeholders(candidates)
+    return StructType(
+        [
+            StructField(f.name, f.dataType, f.nullable or ph[f.name] is None)
+            for f in candidates.fields
+        ]
+        + [StructField("__unseen", IntegerType(), False)]
+        + [StructField(name, t, True) for name, t in state]
+    )
+
+
+def with_shard_row(out: pd.DataFrame, key, placeholders: dict,
+                   state: dict) -> pd.DataFrame:
+    """Candidate rows ``out`` (state columns null) plus the shard's
+    state row.  State columns are object dtype (values or None), so a
+    64-bit count never passes through float64."""
+    for name in state:
+        out[name] = pd.Series([None] * len(out), dtype=object,
+                              index=out.index)
+    row = {**placeholders, "shard_id": int(key[0]), "__unseen": 0, **state}
+    return pd.concat([out, pd.DataFrame([row])], ignore_index=True)
+
+
 def filter_and_update(
     candidates: DataFrame,
     shards: DataFrame,
@@ -122,6 +166,7 @@ def filter_and_update(
     persist: bool = True,
     dedup_key: str | None = None,
     dedup_agg: dict | None = None,
+    added: Observation | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame | None]:
     """One pass per shard: test candidates against the shard's Bloom,
     keep probably-unseen ones, and emit the updated shard blob.
@@ -132,7 +177,13 @@ def filter_and_update(
     ``persist=False``) -- the caller must unpersist it once the outputs
     are materialized, or cached shard passes pile up round over round.
     Implemented as a cogrouped applyInPandas so each shard's state is
-    touched exactly once per round, partition-locally.
+    touched exactly once per round, partition-locally.  Every shard
+    present in ``shards`` emits its state row from the same pass
+    (untouched shards pass their blob through), so ``new_shards`` is a
+    filter of the pass output -- no aggregation or join back onto the
+    old shards.  Persist only when both outputs are consumed; with
+    ``added``, the plan of ``new_shards`` records the number of
+    candidates inserted (``added``) when it runs.
 
     When ``dedup_key`` is set, within-batch deduplication happens
     *inside* the shard pass (pandas groupby per shard) -- valid because
@@ -142,17 +193,14 @@ def filter_and_update(
     must pre-deduplicate (duplicate keys in one batch would all read
     as unseen, since bits are set after the whole batch is tested).
     """
-    out_schema = StructType(
-        list(candidates.schema.fields)
-        + [StructField("__unseen", IntegerType(), False)]
-    )
-
+    state = [("__blob", BinaryType()), ("__n_items", LongType()),
+             ("__added", LongType())]
+    out_schema = shard_pass_schema(candidates.schema, state)
+    placeholders = shard_row_placeholders(candidates.schema)
     cand_cols = [f.name for f in candidates.schema.fields]
 
     def process(key, cand_iter: pd.DataFrame, shard_pdf: pd.DataFrame):
         # cogroup gives all candidate rows + the (single) shard row
-        if len(cand_iter) == 0:
-            return pd.DataFrame(columns=[*cand_cols, "__unseen", "__blob"])
         if dedup_key is not None and len(cand_iter):
             agg = dict(dedup_agg or {})
             for c in cand_cols:
@@ -162,30 +210,38 @@ def filter_and_update(
                 cand_iter.groupby(dedup_key, as_index=False, sort=True)
                 .agg(agg)[cand_cols]
             )
-        if len(shard_pdf):
+        out = cand_iter[cand_cols].copy()
+        out["__unseen"] = np.zeros(len(out), dtype="int32")
+        if len(shard_pdf) == 0:
+            # a shard missing from the state stays missing
+            blob = np.zeros(m_bits // 8, dtype=np.uint8)
+        elif len(out):
             blob = np.frombuffer(
                 shard_pdf.iloc[0]["bloom"], dtype=np.uint8
             ).copy()
         else:
-            blob = np.zeros(m_bits // 8, dtype=np.uint8)
-        hashes = cand_iter["url_hash"].to_numpy(dtype=np.int64)
-        pos = probe_positions(hashes, k, m_bits)
-        seen = _bit_test(blob, pos)
-        _bit_set(blob, pos[~seen])
-        out = cand_iter.copy()
-        out["__unseen"] = (~seen).astype("int32")
-        out["__blob"] = [blob.tobytes()] + [None] * (len(out) - 1)
-        return out
-
-    blob_schema = StructType(
-        list(out_schema.fields) + [StructField("__blob", BinaryType(), True)]
-    )
+            blob = None  # untouched: pass the stored blob through
+        if len(out):
+            hashes = out["url_hash"].to_numpy(dtype=np.int64)
+            pos = probe_positions(hashes, k, m_bits)
+            seen = _bit_test(blob, pos)
+            _bit_set(blob, pos[~seen])
+            out["__unseen"] = (~seen).astype("int32")
+        if len(shard_pdf) == 0:
+            return out.assign(__blob=None, __n_items=None, __added=None)
+        n_added = int(out["__unseen"].sum())
+        old = shard_pdf.iloc[0]
+        return with_shard_row(out, key, placeholders, {
+            "__blob": old["bloom"] if blob is None else blob.tobytes(),
+            "__n_items": int(old["n_items"]) + n_added,
+            "__added": n_added,
+        })
 
     grouped = candidates.groupBy("shard_id").cogroup(
-        shards.withColumnRenamed("shard_id", "shard_id").groupBy("shard_id")
+        shards.groupBy("shard_id")
     )
     result = grouped.applyInPandas(
-        lambda key, l, r: process(key, l, r), blob_schema
+        lambda key, l, r: process(key, l, r), out_schema
     )
     cached = None
     if persist:
@@ -195,25 +251,14 @@ def filter_and_update(
         cached = result
 
     unseen = result.where(F.col("__unseen") == 1).select(*cand_cols)
-    # blob rides on the first row of each shard group; the added count
-    # must aggregate over ALL of the shard's rows
-    touched = (
-        result.groupBy("shard_id")
-        .agg(
-            F.first("__blob", ignorenulls=True).alias("bloom"),
-            F.sum("__unseen").cast("long").alias("added"),
+    state_rows = result.where(F.col("__blob").isNotNull())
+    if added is not None:
+        state_rows = state_rows.observe(
+            added, F.coalesce(F.sum("__added"), F.lit(0)).alias("added")
         )
-        .where(F.col("bloom").isNotNull())
-    )
-    new_shards = (
-        shards.alias("old")
-        .join(touched.alias("t"), "shard_id", "left")
-        .select(
-            "shard_id",
-            F.coalesce(F.col("t.bloom"), F.col("old.bloom")).alias("bloom"),
-            (F.col("old.n_items") + F.coalesce(F.col("t.added"), F.lit(0)))
-            .cast("long")
-            .alias("n_items"),
-        )
+    new_shards = state_rows.select(
+        "shard_id",
+        F.col("__blob").alias("bloom"),
+        F.col("__n_items").alias("n_items"),
     )
     return unseen, new_shards, cached

@@ -43,7 +43,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -53,7 +53,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .bloom import _mix
+from .bloom import (
+    _mix,
+    shard_pass_schema,
+    shard_row_placeholders,
+    with_shard_row,
+)
 
 SLOTS = 4  # slots per bucket (b=4: the paper's sweet spot)
 
@@ -222,48 +227,29 @@ def delete_and_update_cuckoo(
     must carry url_hash + shard_id (``with_shard_cols`` with the same
     n_shards/salt as inserts); returns the updated shards DataFrame,
     n_items decremented by the number of fingerprints actually found.
-    Same partition-local cogroup shape as the insert pass."""
-    out_schema = StructType(
-        [
-            StructField("shard_id", IntegerType(), False),
-            StructField("cuckoo", BinaryType(), False),
-            StructField("deleted", LongType(), False),
-        ]
-    )
+    Same partition-local cogroup shape as the insert pass: every shard
+    of ``shards`` comes out of the pass (untouched ones unchanged)."""
 
     def process(key, vic_pdf: pd.DataFrame, shard_pdf: pd.DataFrame):
-        if len(vic_pdf) == 0 or len(shard_pdf) == 0:
-            return pd.DataFrame(columns=["shard_id", "cuckoo", "deleted"])
-        table = (
-            np.frombuffer(shard_pdf.iloc[0]["cuckoo"], dtype=np.uint16)
-            .reshape(-1, SLOTS)
-            .copy()
-        )
-        hashes = vic_pdf["url_hash"].to_numpy(dtype=np.int64)
-        gone = cuckoo_delete(table, hashes)
-        return pd.DataFrame(
-            {
-                "shard_id": [int(key[0])],
-                "cuckoo": [table.tobytes()],
-                "deleted": [int(gone.sum())],
-            }
-        )
+        if len(shard_pdf) == 0:
+            return shard_pdf
+        old = shard_pdf.iloc[:1].copy()
+        if len(vic_pdf):
+            table = (
+                np.frombuffer(old.iloc[0]["cuckoo"], dtype=np.uint16)
+                .reshape(-1, SLOTS)
+                .copy()
+            )
+            hashes = vic_pdf["url_hash"].to_numpy(dtype=np.int64)
+            gone = cuckoo_delete(table, hashes)
+            old["cuckoo"] = [table.tobytes()]
+            old["n_items"] = old["n_items"] - int(gone.sum())
+        return old
 
-    touched = victims.groupBy("shard_id").cogroup(
+    return victims.groupBy("shard_id").cogroup(
         shards.groupBy("shard_id")
-    ).applyInPandas(lambda key, l, r: process(key, l, r), out_schema)
-    return (
-        shards.alias("old")
-        .join(touched.alias("t"), "shard_id", "left")
-        .select(
-            "shard_id",
-            F.coalesce(F.col("t.cuckoo"), F.col("old.cuckoo"))
-            .alias("cuckoo"),
-            (F.col("old.n_items") - F.coalesce(F.col("t.deleted"), F.lit(0)))
-            .cast("long")
-            .alias("n_items"),
-            F.col("old.n_failed"),
-        )
+    ).applyInPandas(
+        lambda key, l, r: process(key, l, r), CUCKOO_SHARD_SCHEMA
     )
 
 
@@ -274,10 +260,13 @@ def filter_and_update_cuckoo(
     n_buckets: int,
     max_kicks: int = 500,
     persist: bool = True,
+    added: Observation | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame | None]:
     """Cuckoo twin of ``bloom.filter_and_update`` -- same cogroup
     contract: one partition-local pass per shard testing candidates and
-    emitting the updated blob; returns (unseen, new_shards, cached).
+    emitting every shard's state row; returns (unseen, new_shards,
+    cached), and with ``added`` records the number of unseen
+    candidates when ``new_shards`` runs.
 
     An insert that fails (shard full after ``max_kicks`` evictions)
     still reports the URL as unseen -- the crawl proceeds, the URL is
@@ -285,42 +274,41 @@ def filter_and_update_cuckoo(
     loss); the per-shard ``n_failed`` count makes the condition
     observable long before it matters.
     """
+    state = [("__blob", BinaryType()), ("__n_items", LongType()),
+             ("__n_failed", LongType()), ("__added", LongType())]
+    out_schema = shard_pass_schema(candidates.schema, state)
+    placeholders = shard_row_placeholders(candidates.schema)
     cand_cols = [f.name for f in candidates.schema.fields]
-    out_schema = StructType(
-        list(candidates.schema.fields)
-        + [
-            StructField("__unseen", IntegerType(), False),
-            StructField("__blob", BinaryType(), True),
-            StructField("__added", LongType(), True),
-            StructField("__failed", LongType(), True),
-        ]
-    )
 
     def process(key, cand_pdf: pd.DataFrame, shard_pdf: pd.DataFrame):
-        if len(cand_pdf) == 0:
-            return pd.DataFrame(
-                columns=[*cand_cols, "__unseen", "__blob", "__added",
-                         "__failed"]
-            )
+        out = cand_pdf[cand_cols].copy()
+        out["__unseen"] = np.zeros(len(out), dtype="int32")
         if len(shard_pdf):
+            old = shard_pdf.iloc[0]
             table = (
-                np.frombuffer(shard_pdf.iloc[0]["cuckoo"], dtype=np.uint16)
+                np.frombuffer(old["cuckoo"], dtype=np.uint16)
                 .reshape(-1, SLOTS)
                 .copy()
             )
         else:
+            # a shard missing from the state stays missing
             table = cuckoo_new(n_buckets)
-        hashes = cand_pdf["url_hash"].to_numpy(dtype=np.int64)
-        seen = cuckoo_contains(table, hashes)
-        unseen_idx = np.flatnonzero(~seen)
-        inserted = cuckoo_insert(table, hashes[unseen_idx], max_kicks)
-        out = cand_pdf.copy()
-        out["__unseen"] = (~seen).astype("int32")
-        pad = [None] * (len(out) - 1)
-        out["__blob"] = [table.tobytes()] + pad
-        out["__added"] = [int(inserted.sum())] + pad
-        out["__failed"] = [int((~inserted).sum())] + pad
-        return out
+        n_ins = n_fail = 0
+        if len(out):
+            hashes = out["url_hash"].to_numpy(dtype=np.int64)
+            seen = cuckoo_contains(table, hashes)
+            inserted = cuckoo_insert(table, hashes[~seen], max_kicks)
+            out["__unseen"] = (~seen).astype("int32")
+            n_ins, n_fail = int(inserted.sum()), int((~inserted).sum())
+        if len(shard_pdf) == 0:
+            return out.assign(__blob=None, __n_items=None,
+                              __n_failed=None, __added=None)
+        return with_shard_row(out, key, placeholders, {
+            "__blob": table.tobytes() if len(out) else old["cuckoo"],
+            "__n_items": int(old["n_items"]) + n_ins,
+            "__n_failed": int(old["n_failed"]) + n_fail,
+            "__added": int(out["__unseen"].sum()),
+        })
 
     grouped = candidates.groupBy("shard_id").cogroup(
         shards.groupBy("shard_id")
@@ -334,28 +322,15 @@ def filter_and_update_cuckoo(
         cached = result
 
     unseen = result.where(F.col("__unseen") == 1).select(*cand_cols)
-    touched = (
-        result.groupBy("shard_id")
-        .agg(
-            F.first("__blob", ignorenulls=True).alias("cuckoo"),
-            F.first("__added", ignorenulls=True).alias("added"),
-            F.first("__failed", ignorenulls=True).alias("failed"),
+    state_rows = result.where(F.col("__blob").isNotNull())
+    if added is not None:
+        state_rows = state_rows.observe(
+            added, F.coalesce(F.sum("__added"), F.lit(0)).alias("added")
         )
-        .where(F.col("cuckoo").isNotNull())
-    )
-    new_shards = (
-        shards.alias("old")
-        .join(touched.alias("t"), "shard_id", "left")
-        .select(
-            "shard_id",
-            F.coalesce(F.col("t.cuckoo"), F.col("old.cuckoo"))
-            .alias("cuckoo"),
-            (F.col("old.n_items") + F.coalesce(F.col("t.added"), F.lit(0)))
-            .cast("long")
-            .alias("n_items"),
-            (F.col("old.n_failed") + F.coalesce(F.col("t.failed"), F.lit(0)))
-            .cast("long")
-            .alias("n_failed"),
-        )
+    new_shards = state_rows.select(
+        "shard_id",
+        F.col("__blob").alias("cuckoo"),
+        F.col("__n_items").alias("n_items"),
+        F.col("__n_failed").alias("n_failed"),
     )
     return unseen, new_shards, cached

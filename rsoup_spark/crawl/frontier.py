@@ -49,10 +49,11 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 from pyspark.sql.window import Window
@@ -107,13 +108,72 @@ class CrawlConfig:
     # table is bounded by site structure, never by page count.  Must
     # be set from init_state on (the counts log starts at round 1).
     template_budget: int | None = None
-    # overlap the round's checkpoint writes (order/frontier/seen/
-    # shards/lineage -> independent paths) with each other and with
-    # the metrics job by submitting them as concurrent Spark jobs;
-    # the manifest -- the round's atomic commit point -- is still
-    # written only after every table write has completed, so the
-    # crash-consistency contract is unchanged.  1 = sequential.
+    # overlap the round's checkpoint writes (frontier/seen/lineage/
+    # tpl_counts -> independent paths) with each other by submitting
+    # them as concurrent Spark jobs; the manifest -- the round's atomic
+    # commit point -- is still written only after every table write
+    # has completed, so the crash-consistency contract is unchanged.
+    # 1 = sequential.
     checkpoint_threads: int = 4
+
+
+def _metrics(obs: Observation) -> dict:
+    """What an Observation recorded (blocks until its DataFrame ran).
+    Adaptive execution drops a subtree it proves empty, observer
+    included, which leaves an empty row: every count in it is 0."""
+    if obs._jo.getRow().size() == 0:
+        return {}
+    return obs.get
+
+
+def _count(obs: Observation) -> int:
+    """The single count recorded by ``_observe_count``."""
+    return int(_metrics(obs).get("n", 0))
+
+
+def _observe_count(df: DataFrame, obs: Observation) -> DataFrame:
+    return df.observe(obs, F.count(F.lit(1)).alias("n"))
+
+
+class _Checkpoint:
+    """A checkpoint's state-table writes: submitted to a thread pool as
+    concurrent Spark jobs (``threads`` > 1) or run in order.  ``join``
+    waits for every write and re-raises the first failure; it MUST run
+    before write_manifest -- the manifest commits the round, so it
+    cannot observe a partially-written table on crash."""
+
+    def __init__(self, store, round_no: int, threads: int) -> None:
+        self.store, self.round = store, round_no
+        self.pool = ThreadPoolExecutor(threads) if threads > 1 else None
+        self.pending: list[Future] = []
+
+    def _write(self, df: DataFrame, name: str, how: str) -> None:
+        if how == "rewrite":
+            self.store.rewrite(df, self.round, name)
+        else:
+            self.store.write(df, self.round, name, mode=how)
+
+    def write(self, df: DataFrame, name: str, how: str = "overwrite"):
+        """Start writing ``df`` as table ``name`` (``how``: "overwrite",
+        "append" or "rewrite"); returns a call that waits for this
+        write (re-raising its failure)."""
+        if self.pool is None:
+            self._write(df, name, how)
+            return lambda: None
+        fut = self.pool.submit(self._write, df, name, how)
+        self.pending.append(fut)
+        return fut.result
+
+    def join(self) -> None:
+        for fut in self.pending:
+            fut.result()
+        self.pending.clear()
+
+    def close(self) -> None:
+        """Join or cancel every in-flight writer (also on failure, so a
+        retry of the round cannot race orphaned writers)."""
+        if self.pool is not None:
+            self.pool.shutdown(wait=True, cancel_futures=True)
 
 
 def _canon_links(links: DataFrame) -> DataFrame:
@@ -192,15 +252,17 @@ class CrawlEngine:
             )
         return empty_shards(self.spark, cfg.n_shards, cfg.m_bits)
 
-    def _filter_update(self, cand: DataFrame, shards: DataFrame):
+    def _filter_update(self, cand: DataFrame, shards: DataFrame,
+                       persist: bool = True, added=None):
         cfg = self.cfg
         if cfg.seen_filter == "cuckoo":
             return filter_and_update_cuckoo(
                 cand, shards, cfg.n_shards, cfg.cuckoo_buckets,
-                cfg.cuckoo_max_kicks,
+                cfg.cuckoo_max_kicks, persist=persist, added=added,
             )
         return filter_and_update(
-            cand, shards, cfg.n_shards, cfg.m_bits, cfg.bloom_k
+            cand, shards, cfg.n_shards, cfg.m_bits, cfg.bloom_k,
+            persist=persist, added=added,
         )
 
     def init_state(self, seeds: DataFrame) -> None:
@@ -211,20 +273,25 @@ class CrawlEngine:
             "depth",
             "score",
         )
-        self.store.write(frontier, 0, "frontier")
-        # the seen set is append-only: round r's dir holds only the urls
-        # first discovered in round r, so each checkpoint writes O(new)
-        # not O(total) -- at 10^10 urls this is the difference between a
-        # snapshot append and rewriting the world every round (the
-        # Iceberg production analogue is an append commit + MERGE)
-        self.store.write(seeds.select("url"), 0, "seen")
-        shards = self._empty_shards()
         # charge the seeds into the seen filter so rediscovered seeds dedup
         seed_cand = with_shard_cols(frontier, "url", "host", self.cfg.n_shards)
-        _, shards, cached = self._filter_update(seed_cand, shards)
-        self.store.write(shards, 0, "shards")
-        if cached is not None:
-            cached.unpersist()
+        _, shards, _ = self._filter_update(
+            seed_cand, self._empty_shards(), persist=False
+        )
+        ckpt = _Checkpoint(self.store, 0, self.cfg.checkpoint_threads)
+        try:
+            ckpt.write(frontier, "frontier")
+            # the seen set is append-only: round r's dir holds only the
+            # urls first discovered in round r, so each checkpoint writes
+            # O(new) not O(total) -- at 10^10 urls this is the difference
+            # between a snapshot append and rewriting the world every
+            # round (the Iceberg production analogue is an append commit
+            # + MERGE)
+            ckpt.write(seeds.select("url"), "seen")
+            ckpt.write(shards, "shards")
+            ckpt.join()
+        finally:
+            ckpt.close()
         self.store.write_manifest(0, done=False)
 
     def _read_seen(self, up_to_round: int):
@@ -234,26 +301,22 @@ class CrawlEngine:
         an event-log reduction: a URL is seen iff its latest add round
         is later than its latest expiry round -- so re-discovered
         expired URLs re-enter cleanly and double-expiry is idempotent.
-        The plain-append fast path stays shuffle-free for the common
+        Equivalently, some add of the URL has no expiry in the same or
+        a later round: one anti-join, no aggregation (a URL may appear
+        more than once; every consumer is an anti-join or a set).  The
+        plain-append fast path stays shuffle-free for the common
         no-expiry crawl.
         """
         if not self.store.has_log("expired", up_to_round):
             return self.store.read_log("seen", up_to_round)
-        adds = (
-            self.store.read_log_with_round("seen", up_to_round)
-            .groupBy("url")
-            .agg(F.max("round").alias("add_r"))
-        )
-        exps = (
-            self.store.read_log_with_round("expired", up_to_round)
-            .groupBy("url")
-            .agg(F.max("round").alias("exp_r"))
-        )
-        return (
-            adds.join(exps, "url", "left")
-            .where(F.col("add_r") > F.coalesce(F.col("exp_r"), F.lit(-1)))
-            .select("url")
-        )
+        adds = self.store.read_log_with_round("seen", up_to_round)
+        exps = self.store.read_log_with_round("expired", up_to_round)
+        return adds.alias("a").join(
+            exps.alias("e"),
+            (F.col("a.url") == F.col("e.url"))
+            & (F.col("e.round") >= F.col("a.round")),
+            "left_anti",
+        ).select("url")
 
     def last_round(self) -> tuple[int, bool]:
         m = self.store.read_manifest()
@@ -302,43 +365,58 @@ class CrawlEngine:
                 "or seen_filter='cuckoo'"
             )
         r, _ = self.last_round()
+        # persisted: the expired log, the shard deletion and the
+        # re-enqueue must see the same victims, also when ``urls`` is
+        # nondeterministic (a sample, an unordered limit)
         victims = urls.select(
             "url",
             F.regexp_extract("url", r"^https?://([^/]+)", 1).alias("host"),
         ).persist()
-        n = victims.count()
-        # append: several expire() calls can land in the same round
-        self.store.write(victims.select("url"), r, "expired",
-                         mode="append")
-        if cfg.seen_filter == "cuckoo":
-            from .cuckoo import delete_and_update_cuckoo
+        n_expired = Observation()
+        ckpt = _Checkpoint(self.store, r, cfg.checkpoint_threads)
+        try:
+            # the expired log first: it builds the victims cache, and a
+            # failed append stops the expiry before any fingerprint is
+            # deleted.  Append: several expire() calls can land in the
+            # same round
+            ckpt.write(
+                _observe_count(victims.select("url"), n_expired),
+                "expired", how="append",
+            )()
+            # the rewrites land on separate paths: run them concurrently
+            if cfg.seen_filter == "cuckoo":
+                from .cuckoo import delete_and_update_cuckoo
 
-            shards = self.store.read(r, "shards")
-            vic = with_shard_cols(victims, "url", "host", cfg.n_shards)
-            self.store.rewrite(
-                delete_and_update_cuckoo(vic, shards, cfg.cuckoo_buckets),
-                r,
-                "shards",
-            )
-        if reenqueue:
-            frontier = self.store.read(r, "frontier")
-            merged = (
-                frontier.unionByName(
-                    victims.select(
-                        "url",
-                        "host",
-                        F.lit(0).alias("depth"),
-                        F.lit(score).alias("score"),
+                shards = self.store.read(r, "shards")
+                vic = with_shard_cols(victims, "url", "host", cfg.n_shards)
+                ckpt.write(
+                    delete_and_update_cuckoo(vic, shards, cfg.cuckoo_buckets),
+                    "shards", how="rewrite",
+                )
+            if reenqueue:
+                frontier = self.store.read(r, "frontier")
+                merged = (
+                    frontier.unionByName(
+                        victims.select(
+                            "url",
+                            "host",
+                            F.lit(0).alias("depth"),
+                            F.lit(score).alias("score"),
+                        )
+                    )
+                    # a URL already in the frontier keeps its best priority
+                    .groupBy("url", "host")
+                    .agg(
+                        F.min("depth").alias("depth"),
+                        F.max("score").alias("score"),
                     )
                 )
-                # a URL already in the frontier keeps its best priority
-                .groupBy("url", "host")
-                .agg(
-                    F.min("depth").alias("depth"),
-                    F.max("score").alias("score"),
-                )
-            )
-            self.store.rewrite(merged, r, "frontier")
+                ckpt.write(merged, "frontier", how="rewrite")
+            ckpt.join()
+        finally:
+            ckpt.close()
+            victims.unpersist()
+        if reenqueue:
             # a finished crawl has work again: clear done so resume
             # runs; the current horizon carries through so a mid-window
             # expiry does not re-extend (run's extension rule)
@@ -346,57 +424,38 @@ class CrawlEngine:
             self.store.write_manifest(r, done=False,
                                       horizon=m.get("horizon"),
                                       snapshot=m.get("snapshot"))
-        victims.unpersist()
-        return {"round": r, "n_expired": n, "reenqueued": bool(reenqueue)}
+        return {"round": r, "n_expired": _count(n_expired),
+                "reenqueued": bool(reenqueue)}
 
     # -- one round -----------------------------------------------------------
     def run_round(self, r: int) -> dict:
-        """Round r reads round r-1 state and writes round r state.
-
-        Owns the concurrent-checkpoint pool lifecycle: if the round
-        body fails mid-flight (executor loss, a failed write), the
-        finally joins/cancels every in-flight writer before the error
-        propagates -- otherwise a retry or resume of the same round
-        would race orphaned writers against the same round-r paths.
-        """
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = (
-            ThreadPoolExecutor(max_workers=self.cfg.checkpoint_threads)
-            if self.cfg.checkpoint_threads > 1
-            else None
-        )
+        """Round r reads round r-1 state and writes round r state."""
+        ckpt = _Checkpoint(self.store, r, self.cfg.checkpoint_threads)
         try:
-            return self._run_round(r, pool)
+            return self._run_round(r, ckpt)
         finally:
-            if pool is not None:
-                pool.shutdown(wait=True, cancel_futures=True)
+            ckpt.close()
 
-    def _run_round(self, r: int, pool) -> dict:
+    def _run_round(self, r: int, ckpt: _Checkpoint) -> dict:
+        """The round's Spark work is its checkpoint writes: every count
+        the metrics report is an ``Observation`` riding on a write that
+        runs anyway, and a DataFrame is persisted only where two writes
+        consume it.  A counter inside a cache is final only once the
+        query that built the cache is done, so the two writes that
+        build the shared caches finish before any other reader starts:
+        ``order`` (robots gate + schedule), while the driver builds the
+        rest of the round, then ``seen`` (fetch + harvest + dedup).
+        The other writes run concurrently."""
         cfg = self.cfg
         t0 = time.time()
+        # a recrawl round: an expiry is logged, so seen can lose URLs
+        recrawl = self.store.has_log("expired", r - 1)
         frontier = self.store.read(r - 1, "frontier")
         seen = self._read_seen(r - 1)
         shards = self.store.read(r - 1, "shards")
-
-        # concurrent checkpoint writer: each state table lands on its
-        # own path, so the writes only serialize on cluster capacity,
-        # not on each other; _flush() joins them all (re-raising any
-        # failure) and MUST run before write_manifest -- the manifest
-        # commits the round, so it cannot be allowed to observe a
-        # partially-written table on crash.
-        pending: list = []
-
-        def _submit(df: DataFrame, name: str) -> None:
-            if pool is None:
-                self._write(df, r, name)
-            else:
-                pending.append(pool.submit(self._write, df, r, name))
-
-        def _flush() -> None:
-            for fut in pending:
-                fut.result()
-            pending.clear()
+        obs = {k: Observation() for k in (
+            "cand", "tpl", "sched", "fetched", "discovered", "bloom_new",
+            "new", "frontier", "seen")}
 
         # 1. robots gate (broadcast join; parse_url stays in codegen).
         # RFC 9309 longest-match-wins between allow and disallow with
@@ -423,7 +482,14 @@ class CrawlEngine:
         blocked_cond = longest_match("disallow_prefixes") > longest_match(
             "allow_prefixes"
         )
-        cand = cand.withColumn("blocked", blocked_cond).persist()
+        # not persisted: the schedule and the carried-over frontier each
+        # read it, and a second broadcast of robots costs the frontier
+        # write one job where a cache would cost the schedule one.  The
+        # counters are first reported by the order write below.
+        cand = cand.withColumn("blocked", blocked_cond).observe(
+            obs["cand"], F.count(F.lit(1)).alias("candidates"),
+            F.count_if("blocked").alias("blocked"),
+        )
         allowed = cand.where(~F.col("blocked"))
 
         # 1b. per-template trap rationing (cfg.template_budget).  The
@@ -451,11 +517,17 @@ class CrawlEngine:
                 )
             else:
                 alw = alw.withColumn("__used", F.lit(None).cast("long"))
-            alw = alw.withColumn(
-                "tused", F.coalesce("__used", F.lit(0)).cast("long")
-            ).drop("__used").persist()
+            alw = (
+                alw.withColumn(
+                    "tused", F.coalesce("__used", F.lit(0)).cast("long")
+                )
+                .drop("__used")
+                .observe(obs["tpl"], F.count_if(
+                    F.col("tused") >= cfg.template_budget
+                ).alias("tpl_blocked"))
+                .persist()
+            )
             tpl_cache = alw
-            exhausted = alw.where(F.col("tused") >= cfg.template_budget)
             live = alw.where(F.col("tused") < cfg.template_budget)
             wt = Window.partitionBy("host", "template").orderBy(
                 F.desc("score"), F.asc("depth"), F.asc("url")
@@ -468,7 +540,6 @@ class CrawlEngine:
             )
             carry_allowed = live.drop("template", "tused")
         else:
-            exhausted = None
             admitted = allowed
             carry_allowed = allowed
 
@@ -477,12 +548,9 @@ class CrawlEngine:
         # per-salt top-budget (a superset of the per-host top-budget),
         # then the per-host rank sorts only salt*budget rows per host
         budget = F.coalesce("budget", F.lit(1))
-        w1 = Window.partitionBy("host", "salt").orderBy(
-            F.desc("score"), F.asc("depth"), F.asc("url")
-        )
-        w2 = Window.partitionBy("host").orderBy(
-            F.desc("score"), F.asc("depth"), F.asc("url")
-        )
+        priority = (F.desc("score"), F.asc("depth"), F.asc("url"))
+        w1 = Window.partitionBy("host", "salt").orderBy(*priority)
+        w2 = Window.partitionBy("host").orderBy(*priority)
         eligible = (
             admitted.withColumn(
                 "salt",
@@ -494,33 +562,159 @@ class CrawlEngine:
             .where(F.col("host_rank") <= budget)
         )
 
-        # 3. global deterministic batch (top-k, not a full sort)
-        scheduled = (
-            eligible.orderBy(F.desc("score"), F.asc("depth"), F.asc("url"))
+        # 3. global deterministic batch (top-k, not a full sort) ranked
+        # into the round's crawl order.  NOTE: the unpartitioned window
+        # intentionally runs on a single partition -- its input is the
+        # top-k output (<= cfg.batch_size rows, one partition, already
+        # in priority order, so it adds no exchange and no sort), and
+        # the crawl-order contract needs one global, deterministic
+        # rank.  Do not "fix" the WindowExec warning by partitioning;
+        # that would break order equality.
+        scheduled = _observe_count(
+            eligible.orderBy(*priority)
             .limit(cfg.batch_size)
-            .select("url", "host", "depth", "score")
-            .persist()
-        )
-        # NOTE: the unpartitioned window below intentionally runs on a
-        # single partition -- its input is the already-limited batch
-        # (<= cfg.batch_size rows), and the crawl-order contract needs
-        # one global, deterministic rank.  Do not "fix" the WindowExec
-        # warning by partitioning; that would break order equality.
-        order_df = scheduled.orderBy(
-            F.desc("score"), F.asc("depth"), F.asc("url")
-        ).select(
-            F.lit(r).alias("round"),
-            F.row_number()
-            .over(
-                Window.orderBy(F.desc("score"), F.asc("depth"), F.asc("url"))
+            .select(
+                F.lit(r).alias("round"),
+                F.row_number().over(Window.orderBy(*priority))
+                .alias("rank"),
+                "url",
+                "host",
+                "depth",
+                "score",
+            ),
+            obs["sched"],
+        ).persist()
+        # builds the scheduled cache, so its counters are final once it
+        # is done; the next writes are built while it runs
+        order_done = ckpt.write(scheduled, "order")
+
+        # 4.-5. fetch + harvest + canonicalize (one fused Python pass
+        # that carries each page's depth and score onto its links)
+        from ..operators.extract import harvest_canonical_links
+
+        fetched = _observe_count(
+            scheduled.select(
+                F.col("url").alias("src_url"),
+                F.col("depth").alias("p_depth"),
+                F.col("score").alias("p_score"),
             )
-            .alias("rank"),
-            "url",
-            "host",
-            "depth",
-            "score",
+            .join(self.pages.withColumnRenamed("url", "src_url"), "src_url")
+            .where(F.col("html").isNotNull()),
+            obs["fetched"],
         )
-        _submit(order_df, "order")  # overlaps with fetch/harvest below
+        canon = harvest_canonical_links(
+            fetched, "src_url", "html", keep=("p_depth", "p_score")
+        )
+
+        # per-URL aggregation in the JVM: map-side partial agg shrinks
+        # the shuffle ~8:1.  (Folding the dedup into the bloom pass via
+        # dedup_key was measured slower -- it feeds every raw
+        # contribution row through pandas.)
+        contrib = _observe_count(
+            canon.groupBy("url")
+            .agg(
+                (F.min("p_depth") + 1).cast("int").alias("depth"),
+                F.round(F.max("p_score") * DECAY, 9).alias("score"),
+            )
+            .withColumn(
+                "host", F.regexp_extract("url", r"^https?://([^/]+)", 1)
+            ),
+            obs["discovered"],
+        )
+        if recrawl:
+            # recrawl path: an expired victim scheduled THIS round is
+            # absent from round r-1's seen set, so a same-round link to
+            # it would re-admit it as "new" and crawl it twice (the
+            # cuckoo backend physically forgot its fingerprint, so the
+            # filter cannot catch it either).  This round's scheduled
+            # set is the missing piece of "seen as of now"; in a plain
+            # crawl scheduled ⊆ seen makes this anti-join a waste.
+            contrib = contrib.join(scheduled.select("url"), "url",
+                                   "left_anti")
+        # two consumers: the seen filter pass and the backstop
+        cand_new = with_shard_cols(
+            contrib, "url", "host", cfg.n_shards
+        ).persist()
+
+        # 6. bloom dedup (partition-local per shard); the cogroup
+        # provides its own exchange on shard_id.  probably_new is the
+        # bloom-negative subset -- always truly unseen (no false
+        # negatives), but the bloom's false POSITIVES are urls it
+        # wrongly claims seen: without the exact backstop they are
+        # silently lost.  The backstop anti-joins the full candidate
+        # set against seen, so new_urls is exact and the fp count is
+        # observable as n_new - n_bloom_new (probably_new ⊆ new_urls).
+        # With the backstop on, the pass feeds only the shards write.
+        probably_new, new_shards, bloom_cache = self._filter_update(
+            cand_new, shards, persist=not cfg.exact_backstop,
+            added=obs["bloom_new"],
+        )
+        rescheduled = None
+        if cfg.exact_backstop:
+            # one anti-join against seen serves both the new URLs and,
+            # on recrawl rounds, the rescheduled victims: an expired
+            # URL re-enqueued by expire() is scheduled while absent from
+            # seen -- crawling it re-seens it even when no surviving
+            # page links to it.  The two parts are disjoint (cand_new
+            # excludes this round's scheduled URLs on recrawl rounds).
+            probe = cand_new.select(
+                "url", "host", "depth", "score", F.lit(False).alias("sched")
+            )
+            if recrawl:
+                probe = probe.unionByName(scheduled.select(
+                    "url", "host", "depth", "score",
+                    F.lit(True).alias("sched"),
+                ))
+            # not persisted: the frontier write repeats the anti-join
+            # (broadcasts it can run alongside its others) rather than
+            # the seen write paying a cache stage on the round's
+            # critical path
+            unseen = probe.join(seen, "url", "left_anti")
+            new_urls = unseen.where(~F.col("sched")).drop("sched")
+            if recrawl:
+                rescheduled = unseen.where(F.col("sched")).select("url")
+        else:
+            # production path: bloom is authoritative (fp-rate loss
+            # accepted); the seen anti-join shuffle disappears (the pass
+            # output is cached, so new_urls is a filter of it)
+            new_urls = probably_new.select("url", "host", "depth", "score")
+            if recrawl:
+                rescheduled = scheduled.select("url").join(
+                    seen, "url", "left_anti"
+                )
+        if rescheduled is not None and cfg.seen_filter == "cuckoo":
+            # the victim's fingerprint was physically deleted by
+            # expire(), and the recrawl anti-join keeps it out of
+            # cand_new in its own scheduling round -- so in the
+            # production backstop-off mode, where the filter IS the
+            # seen set, a later-round link would re-admit it as
+            # probably_new and crawl it twice.  Re-insert the round's
+            # scheduled-but-unseen fingerprints (<= one batch of rows,
+            # recrawl rounds only).  Bloom needs no pass: its bits were
+            # never cleared.
+            resched_cand = with_shard_cols(
+                rescheduled.join(scheduled.select("url", "host"), "url"),
+                "url", "host", cfg.n_shards,
+            )
+            _, new_shards, _ = self._filter_update(
+                resched_cand, new_shards, persist=False
+            )
+        # append-only seen: only this round's new (and, on recrawl
+        # rounds, rescheduled) urls are written
+        new_seen = _observe_count(new_urls, obs["new"]).select("url")
+        if rescheduled is not None:
+            new_seen = new_seen.unionByName(rescheduled.select("url"))
+
+        order_done()
+        n_scheduled = _count(obs["sched"])
+        # per-partition lineage (north_rule: per-partition lineage +
+        # metrics): the batch is the top-k's single partition 0, so its
+        # row is known on the driver
+        lineage = self.spark.createDataFrame(
+            [(0, n_scheduled, r)] if n_scheduled else [],
+            "partition_id INT, urls_scheduled BIGINT, round INT",
+        )
+        ckpt.write(lineage, "lineage")
 
         if cfg.template_budget is not None:
             # append this round's per-template schedule counts
@@ -534,83 +728,21 @@ class CrawlEngine:
                 .groupBy("host", "template")
                 .agg(F.count("*").cast("long").alias("n_scheduled"))
             )
-            _submit(inc, "tpl_counts")
+            ckpt.write(inc, "tpl_counts")
 
-        # 4.-5. fetch + harvest + canonicalize (one fused Python pass)
-        from ..operators.extract import harvest_canonical_links
+        # seen is written before the rest: it builds the cand_new (and,
+        # backstop off, the bloom) cache, so the fetch and harvest
+        # counters are final once it is done
+        ckpt.write(_observe_count(new_seen, obs["seen"]), "seen")()
+        ckpt.write(new_shards, "shards")
 
-        fetched = scheduled.join(self.pages, "url", "left").persist()
-        canon = harvest_canonical_links(
-            fetched.where(F.col("html").isNotNull()), "url", "html"
-        )
-
-        # per-URL aggregation in the JVM: map-side partial agg shrinks
-        # the shuffle ~8:1 before anything reaches Python.  (Folding the
-        # dedup into the bloom pass via dedup_key was measured slower --
-        # it feeds every raw contribution row through pandas.)
-        parent = scheduled.select(
-            F.col("url").alias("src_url"),
-            F.col("depth").alias("p_depth"),
-            F.col("score").alias("p_score"),
-        )
-        contrib = (
-            canon.join(parent, "src_url")
-            .groupBy("url")
-            .agg(
-                (F.min("p_depth") + 1).cast("int").alias("depth"),
-                F.round(F.max("p_score") * DECAY, 9).alias("score"),
-            )
-            .withColumn(
-                "host", F.regexp_extract("url", r"^https?://([^/]+)", 1)
-            )
-            .persist()
-        )
-
-        # 6. bloom dedup (partition-local per shard); the cogroup
-        # provides its own exchange on shard_id.  probably_new is the
-        # bloom-negative subset -- always truly unseen (no false
-        # negatives), but the bloom's false POSITIVES are urls it
-        # wrongly claims seen: without the exact backstop they are
-        # silently lost.  The backstop anti-joins the full candidate
-        # set against seen, so new_urls is exact and the fp count is
-        # observable as n_new - n_bloom_new (probably_new ⊆ new_urls).
-        cand_new = with_shard_cols(contrib, "url", "host", cfg.n_shards)
-        if self.store.has_log("expired", r - 1):
-            # recrawl path: an expired victim scheduled THIS round is
-            # absent from round r-1's seen set, so a same-round link to
-            # it would re-admit it as "new" and crawl it twice (the
-            # cuckoo backend physically forgot its fingerprint, so the
-            # filter cannot catch it either).  This round's scheduled
-            # set is the missing piece of "seen as of now"; in a plain
-            # crawl scheduled ⊆ seen makes this anti-join a waste.
-            cand_new = cand_new.join(
-                scheduled.select("url"), "url", "left_anti"
-            )
-        probably_new, new_shards, bloom_cache = self._filter_update(
-            cand_new, shards
-        )
-        probably_new = probably_new.persist()
-        if cfg.exact_backstop:
-            new_urls = (
-                cand_new.select("url", "host", "depth", "score")
-                .join(seen, "url", "left_anti")
-                .persist()
-            )
-        else:
-            # production path: bloom is authoritative (fp-rate loss
-            # accepted); the seen anti-join shuffle disappears
-            new_urls = probably_new.select(
-                "url", "host", "depth", "score"
-            ).persist()
-
-        # 7. next state (writes also populate the caches the metrics
-        # job reads below)
+        # 7. next state
         next_frontier = (
             carry_allowed.join(scheduled.select("url"), "url", "left_anti")
             .select("url", "host", "depth", "score")
             .unionByName(new_urls)
         )
-        if self.store.has_log("expired", r - 1):
+        if recrawl:
             # after an expiry, a re-enqueued URL can ALSO be organically
             # rediscovered before it gets scheduled (it is no longer in
             # seen), putting it in both union branches -- collapse to
@@ -632,7 +764,7 @@ class CrawlEngine:
             edges_r = canon.select(
                 F.col("src_url").alias("src"), F.col("url").alias("dst")
             ).distinct()
-            self._write(edges_r, r, "edges")
+            self.store.write(edges_r, r, "edges")
             # distinct across rounds, not just within: after expire() a
             # re-scheduled URL re-harvests its out-links into a later
             # round's log, and duplicate (src,dst) rows would double
@@ -657,89 +789,26 @@ class CrawlEngine:
                 F.coalesce(F.col("pr_scaled").cast("double"), F.lit(base))
                 .alias("score"),
             )
-        _submit(next_frontier, "frontier")
-        # append-only seen: only this round's new urls are written
-        new_seen = new_urls.select("url")
-        resched_cache = None
-        if self.store.has_log("expired", r - 1):
-            # recrawl path: an expired URL re-enqueued by expire() is
-            # scheduled while absent from seen -- crawling it re-seens
-            # it even when no surviving page links to it.  Expiry-only
-            # branch; in a plain crawl scheduled ⊆ seen always.
-            rescheduled = scheduled.join(seen, "url", "left_anti")
-            new_seen = new_seen.unionByName(
-                rescheduled.select("url")
-            ).distinct()
-            if cfg.seen_filter == "cuckoo":
-                # the victim's fingerprint was physically deleted by
-                # expire(), and the recrawl anti-join keeps it out of
-                # cand_new in its own scheduling round -- so in
-                # the production backstop-off mode, where the filter IS
-                # the seen set, a later-round link would re-admit it as
-                # probably_new and crawl it twice.  Re-insert the
-                # round's scheduled-but-unseen fingerprints (<= one
-                # batch of rows, expiry rounds only).  Bloom needs no
-                # pass: its bits were never cleared.
-                resched_cand = with_shard_cols(
-                    rescheduled, "url", "host", cfg.n_shards
-                )
-                _, new_shards, resched_cache = self._filter_update(
-                    resched_cand, new_shards
-                )
-        _submit(new_seen, "seen")
-        _submit(new_shards, "shards")
-
-        # per-partition lineage: which partition produced how many
-        # scheduled rows (north_rule: per-partition lineage + metrics)
-        lineage = (
-            scheduled.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("urls_scheduled"))
-            .withColumn("round", F.lit(r))
-        )
-        _submit(lineage, "lineage")
-
-        # one metrics job: every branch is persisted, so this is seven
-        # single-row aggregates over caches instead of seven actions;
-        # it runs on the driver thread while the checkpoint writes are
-        # still in flight on the pool
-        def _c(name: str, df: DataFrame) -> DataFrame:
-            return df.agg(F.count("*").cast("long").alias("v")).select(
-                F.lit(name).alias("k"), "v"
-            )
-
-        counts_df = (
-            _c("candidates", cand)
-            .unionByName(_c("blocked", cand.where("blocked")))
-            .unionByName(_c("scheduled", scheduled))
-            .unionByName(
-                _c("fetched", fetched.where(F.col("html").isNotNull()))
-            )
-            .unionByName(_c("discovered", contrib))
-            .unionByName(_c("bloom_new", probably_new))
-            .unionByName(_c("new", new_urls))
-        )
-        if exhausted is not None:
-            counts_df = counts_df.unionByName(
-                _c("tpl_blocked", exhausted)
-            )
-        vals = {row["k"]: row["v"] for row in counts_df.collect()}  # bounded
+        ckpt.write(_observe_count(next_frontier, obs["frontier"]), "frontier")
 
         # join every in-flight checkpoint write BEFORE the manifest
-        # commit (and before the expiry branch below re-reads the
-        # just-written frontier table); wall_ms therefore still
-        # covers the full round including checkpoint I/O
-        _flush()
+        # commit; wall_ms therefore still covers the full round
+        # including checkpoint I/O
+        ckpt.join()
 
+        cand_counts = _metrics(obs["cand"])
+        n_bloom_new = int(_metrics(obs["bloom_new"]).get("added", 0))
+        n_new = _count(obs["new"])
         metrics = {
             "round": r,
             "seen_filter": cfg.seen_filter,
-            "n_candidates": vals["candidates"],
-            "n_blocked": vals["blocked"],
-            "n_scheduled": vals["scheduled"],
-            "n_fetched": vals["fetched"],
-            "n_discovered": vals["discovered"],
-            "n_bloom_new": vals["bloom_new"],
-            "n_new": vals["new"],
+            "n_candidates": int(cand_counts.get("candidates", 0)),
+            "n_blocked": int(cand_counts.get("blocked", 0)),
+            "n_scheduled": n_scheduled,
+            "n_fetched": _count(obs["fetched"]),
+            "n_discovered": _count(obs["discovered"]),
+            "n_bloom_new": n_bloom_new,
+            "n_new": n_new,
             # urls the seen filter wrongly claimed seen, recovered by
             # the exact backstop (None when the backstop is off:
             # without the exact join the loss is unobservable).  For
@@ -749,33 +818,18 @@ class CrawlEngine:
             # crawl, never a loss); shard n_failed makes that state
             # observable directly.
             "bloom_false_positives": (
-                vals["new"] - vals["bloom_new"]
-                if cfg.exact_backstop else None
+                n_new - n_bloom_new if cfg.exact_backstop else None
             ),
             # urls dropped for good because their template's budget is
             # spent (None when template rationing is off)
-            "n_template_blocked": vals.get("tpl_blocked"),
+            "n_template_blocked": (
+                int(_metrics(obs["tpl"]).get("tpl_blocked", 0))
+                if cfg.template_budget is not None else None
+            ),
             "wall_ms": int((time.time() - t0) * 1000),
         }
         with open(self._path(r, "metrics.json"), "w") as f:
             json.dump(metrics, f)
-        if self.store.has_log("expired", r - 1):
-            # recrawl rounds invalidate the derived arithmetic: the
-            # post-expiry groupBy merge collapses duplicate frontier
-            # rows and the seen append includes rescheduled victims --
-            # count the tables actually written (tiny parquet reads,
-            # expiry rounds only)
-            frontier_rows = self.store.read(r, "frontier").count()
-            seen_appended = self.store.read(r, "seen").count()
-        else:
-            frontier_rows = (
-                metrics["n_candidates"]
-                - metrics["n_blocked"]
-                - (metrics["n_template_blocked"] or 0)
-                - metrics["n_scheduled"]
-                + metrics["n_new"]
-            )
-            seen_appended = metrics["n_new"]
         self.store.write_manifest(
             r,
             done=metrics["n_scheduled"] == 0,
@@ -783,22 +837,18 @@ class CrawlEngine:
             snapshot={
                 "tables": {
                     "order": {"rows": metrics["n_scheduled"]},
-                    "seen": {"rows_appended": seen_appended},
-                    "frontier": {"rows": frontier_rows},
+                    "seen": {"rows_appended": _count(obs["seen"])},
+                    "frontier": {"rows": _count(obs["frontier"])},
                     "shards": {"rows": cfg.n_shards},
                 },
                 "lineage": self._path(r, "lineage"),
             },
         )
 
-        for df in (cand, scheduled, fetched, contrib, probably_new,
-                   new_urls, bloom_cache, resched_cache, tpl_cache):
+        for df in (scheduled, cand_new, bloom_cache, tpl_cache):
             if df is not None:
                 df.unpersist()
         return metrics
-
-    def _write(self, df: DataFrame, round_no: int, name: str) -> None:
-        self.store.write(df, round_no, name)
 
     # -- driver loop ----------------------------------------------------------
     def run(self, seeds: DataFrame | None = None,

@@ -14,7 +14,7 @@ from __future__ import annotations
 from typing import Iterator, Optional
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.context import ContentHierarchy
@@ -256,15 +256,18 @@ def harvest_links(
 
 
 def harvest_canonical_links(
-    docs: DataFrame, url_col: str = "url", html_col: str = "html"
+    docs: DataFrame, url_col: str = "url", html_col: str = "html",
+    keep: tuple[str, ...] = (),
 ) -> DataFrame:
-    """docs -> (src_url, url): canonical http(s) anchor targets.
+    """docs -> (src_url, url, *keep): canonical http(s) anchor targets,
+    each carrying its document's ``keep`` columns.
 
     Harvest + RFC3986 canonicalization fused into ONE Python pass:
     chaining mapInPandas -> pandas_udf in the same task pipelines two
     Python workers per task with batch-synchronous JVM round-trips
     (measured ~10x slower at high core counts), so the crawl hot path
-    does both in a single Arrow crossing.
+    does both in a single Arrow crossing.  ``keep`` saves a join back
+    onto the documents (the crawl carries each page's depth and score).
     """
     from ..functions.urlnorm import canonicalize_url
 
@@ -274,12 +277,13 @@ def harvest_canonical_links(
             StructField("src_url", StringType(), False),
             StructField("url", StringType(), False),
         ]
+        + [docs.schema[c] for c in keep]
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            srcs, urls = [], []
-            for src, html in zip(pdf[u_c], pdf[h_c]):
+            srcs, urls, rows = [], [], []
+            for i, (src, html) in enumerate(zip(pdf[u_c], pdf[h_c])):
                 src = str(src)
                 for span in spans_from_html(src, str(html)):
                     if span["kind"] == "a" and span["media_ref"]:
@@ -287,9 +291,13 @@ def harvest_canonical_links(
                         if canon:
                             srcs.append(src)
                             urls.append(canon)
-            yield pd.DataFrame({"src_url": srcs, "url": urls})
+                            rows.append(i)
+            out = pd.DataFrame({"src_url": srcs, "url": urls})
+            for c in keep:
+                out[c] = pdf[c].to_numpy()[rows]
+            yield out
 
-    return docs.select(u_c, h_c).mapInPandas(run, schema)
+    return docs.select(u_c, h_c, *keep).mapInPandas(run, schema)
 
 
 def links_from_spans(spans_df: DataFrame) -> DataFrame:
@@ -304,14 +312,6 @@ def links_from_spans(spans_df: DataFrame) -> DataFrame:
             F.col("s.media_ref").alias("href"),
             F.col("s.text").alias("anchor_text"),
         )
-    )
-
-
-def cell_text_matrix(tables: DataFrame) -> Column:
-    """``to_list()`` as a columnar expression (table.rs:370-372):
-    rows -> cells -> value.text, fully JVM-side."""
-    return F.transform(
-        "rows", lambda r: F.transform(r["cells"], lambda c: c["value"]["text"])
     )
 
 

@@ -17,6 +17,8 @@
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -57,8 +59,6 @@ def _py_norm(vec) -> float:
     """Driver-side twin of ``_norm``: the identical sequential
     float64 fold (+ correctly-rounded sqrt), so a literal centroid
     norm equals the JVM expression bit-for-bit."""
-    import math
-
     acc = 0.0
     for x in vec:
         acc = acc + float(x) * float(x)
@@ -275,8 +275,16 @@ def _sql_double(x: float) -> str:
     """Exact SQL double literal: ``repr`` emits the shortest decimal
     that round-trips the IEEE value, and Spark parses double literals
     with correctly-rounded ``Double.parseDouble``, so the parsed
-    constant is the identical bits."""
-    return repr(float(x)) + "D"
+    constant is the identical bits.  NaN and the infinities have no
+    literal form (``nanD``/``infD`` do not parse); they are casts of
+    the strings Spark's double cast accepts."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        sign = "" if x > 0 else "-"
+        return f"CAST('{sign}Infinity' AS DOUBLE)"
+    return repr(x) + "D"
 
 
 def _sql_int(x: int) -> str:
@@ -547,8 +555,6 @@ def _lsh_tables(tau: float, n_planes: int, target_recall: float) -> int:
     is too low for hyperplane LSH to filter anything and the exact
     blocked GEMM is the honest choice (embedding_dup_pairs falls back
     automatically)."""
-    import math
-
     p1 = 1.0 - math.acos(max(min(tau, 1.0), -1.0)) / math.pi
     pt = p1 ** n_planes
     if pt >= 1.0:

@@ -13,12 +13,19 @@ Design notes (SURVEY.md §4):
 
 from __future__ import annotations
 
+import logging
 import os
 
+import pandas as pd
 from pyspark.sql import SparkSession
 
 ARROW_MAX_RECORDS = 10_000
 ARROW_MAX_BYTES = "32m"
+# Python worker daemon that skips the per-task re-read of unchanged zip
+# archives (see rsoup_spark/_pydaemon.py)
+PYTHON_DAEMON_MODULE = "rsoup_spark._pydaemon"
+
+log = logging.getLogger("rsoup_spark")
 
 # sessions already primed by _warm_session (keyed by the JVM
 # SparkContext application id, so a getOrCreate that returns an
@@ -38,11 +45,9 @@ def _warm_session(spark: SparkSession) -> None:
     nothing is read from or keyed on any input, and nothing is kept.
     ``SPARK_GRAFT_NO_WARM=1`` skips (unit-test sessions that never run
     a query don't need the ~1-2s)."""
-    import pandas as pd  # noqa: F401 -- resolves the UDF type hints
     from pyspark.sql import functions as F
 
-    globals()["pd"] = pd  # pandas_udf resolves string hints at module scope
-
+    # the hints resolve against this module's top-level ``pd``
     @F.pandas_udf("long")
     def _wu(x: pd.Series) -> pd.Series:
         return x
@@ -129,6 +134,7 @@ def get_spark(
         # (on a real cluster the executors carry their own memory).
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
         .getOrCreate()
     )
     app_id = spark.sparkContext.applicationId
@@ -141,7 +147,8 @@ def get_spark(
             _warm_session(spark)
         except Exception:
             # priming is an optimization; a session that cannot run the
-            # warm-up job must still be handed to the caller (whose own
-            # query will surface the real error with its own context)
-            pass
+            # warm-up job is still handed to the caller, but the failure
+            # (e.g. a Python worker daemon that cannot start) is logged
+            # here instead of surfacing first inside an unrelated query
+            log.warning("session warm-up failed", exc_info=True)
     return spark

@@ -46,21 +46,3 @@ def write_tables(
         out.writeTo(path_or_table.removeprefix("iceberg:")).append()
         return
     out.write.mode(mode).partitionBy("host_bucket").parquet(path_or_table)
-
-
-def write_spans(df: DataFrame, path: str, mode: str = "append") -> None:
-    df.write.mode(mode).parquet(path)
-
-
-def merge_seen(
-    spark: SparkSession, seen_path: str, new_urls: DataFrame
-) -> None:
-    """Seen-set upsert.  Parquet fallback = union distinct rewrite;
-    Iceberg production path = ``MERGE INTO seen USING new ON url``
-    (documented, not executable without a catalog here)."""
-    old = spark.read.parquet(seen_path)
-    old.unionByName(new_urls.select("url")).distinct().write.mode(
-        "overwrite"
-    ).parquet(seen_path + ".tmp")
-    # atomic swap is the caller's job (the crawl engine versions by
-    # round directory instead, which is already atomic)

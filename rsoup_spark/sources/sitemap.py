@@ -32,7 +32,7 @@ from xml.etree import ElementTree
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -201,20 +201,6 @@ def sitemap_entries(files: DataFrame, src_col: str = "src",
     return files.select(
         files[src_col].alias(src_col), files[data_col]
     ).mapInPandas(run, SITEMAP_ENTRY_SCHEMA)
-
-
-def load_sitemap_dir(spark: SparkSession, path: str,
-                     glob: str = "*.xml*") -> DataFrame:
-    """Directory of sitemap files -> entry rows.  binaryFile source
-    gives file-level splits (the spec caps a file at 50k URLs / 50 MB,
-    so that is the natural parallelism); parsing is distributed."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("path", "content")
-    )
-    return sitemap_entries(files, src_col="path", data_col="content")
 
 
 def sitemap_seeds(entries: DataFrame) -> DataFrame:

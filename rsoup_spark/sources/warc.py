@@ -27,7 +27,7 @@ import io
 import zlib
 from typing import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -224,17 +224,3 @@ def warc_records(archives: DataFrame, src_col: str = "src",
     return archives.select(
         archives[src_col].alias(src_col), archives[data_col]
     ).mapInPandas(run, WARC_RECORD_SCHEMA)
-
-
-def load_warc_dir(spark: SparkSession, path: str,
-                  glob: str = "*.warc.gz") -> DataFrame:
-    """Directory of WARC archives -> record rows.  binaryFile source
-    gives file-level splits (Common Crawl shards archives ~1 GB so
-    that is the natural parallelism); parsing is distributed."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("path", "content")
-    )
-    return warc_records(files, src_col="path", data_col="content")

@@ -14,7 +14,6 @@ exactly-once file semantics via the checkpoint.
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.extract import extract_spans
@@ -39,45 +38,6 @@ def stream_extract_spans(
     spans = extract_spans(pages, "url", "html")
     return (
         spans.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_link_rates(
-    spark: SparkSession,
-    input_dir: str,
-    checkpoint_dir: str,
-    output_dir: str,
-    window_duration: str = "1 minute",
-    watermark: str = "2 minutes",
-) -> StreamingQuery:
-    """Windowed per-host discovery rates with a watermark for late data:
-    the streaming-aggregation surface (watermark + tumbling window)."""
-    pages = (
-        spark.readStream.schema(
-            PAGE_INPUT_SCHEMA + ", fetch_ts timestamp"
-        ).parquet(input_dir)
-    )
-    spans = extract_spans(pages, "url", "html")
-    hosts = spans.select(
-        F.regexp_extract("doc_id", r"^https?://([^/]+)", 1).alias("host"),
-        F.size("spans").alias("n_spans"),
-        F.current_timestamp().alias("ts"),
-    )
-    agg = (
-        hosts.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_duration), "host")
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum("n_spans").alias("spans"),
-        )
-    )
-    return (
-        agg.writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")

@@ -1,4 +1,12 @@
+import os
+
 import pytest
+
+# the suite's one local JVM holds the driver and every task slot; a heap
+# the size of get_spark()'s 16g default can outgrow a small machine over
+# a full run instead of being collected.  Set before any test module
+# can start the JVM.
+os.environ.setdefault("SPARK_DRIVER_MEM", "6g")
 
 
 @pytest.fixture(scope="session")

@@ -410,3 +410,102 @@ def test_capped_resume_stays_capped_without_expiry(spark, web):
         assert resched == set(victims)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+@pytest.mark.spark
+def test_fresh_engine_resumes_expiry_checkpoint(spark, web):
+    """A checkpoint holding finished rounds and an expiry, written by one
+    engine, resumes in a fresh engine -- as in a new process, whose store
+    infers every table's schema from the files -- and ends exactly where
+    the oracle's expire-then-resume ends."""
+    from rsoup_spark.crawl.fixtures import robots_rows
+    from rsoup_spark.crawl.oracle import simulate
+
+    pages, robots, seeds = web
+    cfg = CrawlConfig(batch_size=16, max_rounds=3, n_shards=8,
+                      m_bits=1 << 14)
+    tmp = tempfile.mkdtemp(prefix="recrawl_fresh_")
+    try:
+        first = _run_to_done(spark, web, cfg, tmp)
+        victims = sorted(u for _r, _k, u in first.crawl_order())[:4]
+        first.expire(
+            spark.createDataFrame([(u,) for u in victims], "url string")
+        )
+        resumed = CrawlEngine(spark, pages, robots, tmp, cfg)
+        assert resumed.run(resume=True)
+        graph = {
+            r["url"]: list(r["out_links"])
+            for r in pages.select("url", "out_links").collect()
+        }
+        want_order, want_seen = simulate(
+            graph,
+            [(r["url"], r["score"], r["depth"]) for r in seeds.collect()],
+            robots_rows(4),
+            batch_size=cfg.batch_size,
+            round_seconds=cfg.round_seconds,
+            max_rounds=cfg.max_rounds,
+            expire_events=[victims],
+        )
+        assert resumed.crawl_order() == want_order
+        assert resumed.seen_set() == want_seen
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+@pytest.mark.spark
+def test_nondeterministic_expiry_input_is_read_once(spark, web):
+    """expire() from a DataFrame that differs on every evaluation (a
+    random filter): the expired log, the cuckoo deletions and the
+    re-enqueue all see the same victims, and the resumed crawl matches
+    the oracle expiring exactly the logged URLs."""
+    import random
+
+    from rsoup_spark.crawl.fixtures import robots_rows
+    from rsoup_spark.crawl.oracle import simulate
+
+    pages, robots, seeds = web
+    cfg = CrawlConfig(batch_size=16, max_rounds=3, n_shards=8,
+                      seen_filter="cuckoo", cuckoo_buckets=1 << 10)
+    tmp = tempfile.mkdtemp(prefix="recrawl_rand_")
+    try:
+        eng = _run_to_done(spark, web, cfg, tmp)
+        r0 = eng.last_round()[0]
+        n_before = sum(
+            r["n_items"] for r in eng.store.read(r0, "shards").collect()
+        )
+        frontier_before = {
+            r["url"] for r in eng.store.read(r0, "frontier").collect()
+        }
+        coin = F.udf(lambda _u: random.random() < 0.5,
+                     "boolean").asNondeterministic()
+        info = eng.expire(eng._read_seen(r0).where(coin("url")))
+        expired = {r["url"] for r in eng.store.read(r0, "expired").collect()}
+        assert expired and info["n_expired"] == len(expired)
+        # the shards lost exactly the logged fingerprints
+        shard_rows = eng.store.read(r0, "shards").collect()
+        assert sum(r["n_items"] for r in shard_rows) == n_before - len(expired)
+        # the frontier gained exactly the logged URLs
+        frontier = {
+            r["url"] for r in eng.store.read(r0, "frontier").collect()
+        }
+        assert frontier - frontier_before == expired - frontier_before
+        assert expired <= frontier
+
+        eng.run(resume=True)
+        graph = {
+            r["url"]: list(r["out_links"])
+            for r in pages.select("url", "out_links").collect()
+        }
+        want_order, want_seen = simulate(
+            graph,
+            [(r["url"], r["score"], r["depth"]) for r in seeds.collect()],
+            robots_rows(4),
+            batch_size=cfg.batch_size,
+            round_seconds=cfg.round_seconds,
+            max_rounds=cfg.max_rounds,
+            expire_events=[sorted(expired)],
+        )
+        assert eng.crawl_order() == want_order
+        assert eng.seen_set() == want_seen
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)

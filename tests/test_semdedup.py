@@ -121,3 +121,47 @@ def test_sql_assigner_bitwise_matches_python_fold(spark):
             ):
                 best_cos, best_cid = cos, cid
         assert got[row["vec_id"]] == best_cid, row["vec_id"]
+
+
+def test_sql_double_literals():
+    """Finite values keep their exact round-trip literal; NaN and the
+    infinities become casts the SQL parser accepts."""
+    from rsoup_spark.ops.similarity import _sql_double
+
+    assert _sql_double(0.1) == "0.1D"
+    assert _sql_double(-2.5e-300) == "-2.5e-300D"
+    assert _sql_double(float("nan")) == "CAST('NaN' AS DOUBLE)"
+    assert _sql_double(float("inf")) == "CAST('Infinity' AS DOUBLE)"
+    assert _sql_double(float("-inf")) == "CAST('-Infinity' AS DOUBLE)"
+
+
+@pytest.mark.spark
+def test_non_finite_centroid_builds_a_plan(spark):
+    """A NaN or infinite centroid component used to emit ``nanD`` /
+    ``infD``, which the parser rejects at plan construction.  The cell
+    assigner now builds and runs, and each literal parses to its value."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from rsoup_spark.ops.similarity import _cell_assigner, _sql_double
+
+    values = [float("nan"), float("inf"), float("-inf"), 1.5]
+    got = spark.range(1).select(
+        *[F.expr(_sql_double(v)).alias(f"c{i}") for i, v in enumerate(values)]
+    ).first()
+    assert math.isnan(got["c0"])
+    assert [got["c1"], got["c2"], got["c3"]] == values[1:]
+
+    cents = [
+        {"cid": 0, "cv": [float("nan"), 1.0]},
+        {"cid": 1, "cv": [float("inf"), 0.0]},
+        {"cid": 2, "cv": [1.0, 0.0]},
+    ]
+    cell_of = _cell_assigner(cents)
+    rows = (
+        spark.createDataFrame([([1.0, 0.0], 1.0)], "v array<double>, nv double")
+        .select(cell_of("v", "nv"))
+        .collect()
+    )
+    assert len(rows) == 1
