@@ -32,9 +32,6 @@ def main() -> None:
     ap.add_argument("--repeat", type=int, default=3)
     ap.add_argument("--extract-only", action="store_true")
     ap.add_argument("--parts-per-core", type=int, default=4)
-    ap.add_argument("--seen-filter", choices=["bloom", "cuckoo"],
-                    default="bloom")
-    ap.add_argument("--cuckoo-buckets", type=int, default=1 << 14)
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -44,10 +41,6 @@ def main() -> None:
         empty_shards,
         filter_and_update,
         with_shard_cols,
-    )
-    from rsoup_spark.crawl.cuckoo import (
-        empty_cuckoo_shards,
-        filter_and_update_cuckoo,
     )
     from rsoup_spark.crawl.fixtures import gen_pages, gen_robots
     from rsoup_spark.operators.extract import (
@@ -90,12 +83,6 @@ def main() -> None:
     )
     wu, _, _ = filter_and_update(wcand, wshards, 8, 1 << 16, persist=False)
     noop(wu)
-    if args.seen_filter == "cuckoo":
-        wcu, _, _ = filter_and_update_cuckoo(
-            wcand, empty_cuckoo_shards(spark, 8, 1 << 10), 8, 1 << 10,
-            persist=False,
-        )
-        noop(wcu)
 
     # -- extraction throughput (best of N: the sandbox VM has noisy
     # CPU, so the minimum reflects actual capability) -------------------------
@@ -127,10 +114,7 @@ def main() -> None:
     )
     n_shards = 64
     m_bits = 1 << 22
-    if args.seen_filter == "cuckoo":
-        shards = empty_cuckoo_shards(spark, n_shards, args.cuckoo_buckets)
-    else:
-        shards = empty_shards(spark, n_shards, m_bits)
+    shards = empty_shards(spark, n_shards, m_bits)
 
     # one composed pipeline, one action: harvest -> canonicalize ->
     # aggregate -> politeness rank -> bloom dedup (how a production
@@ -154,14 +138,9 @@ def main() -> None:
         # bloom shards instead of 4, so no cogroup task carries 3x the
         # average candidate load
         cand = with_shard_cols(discovered, "url", "host", n_shards, salt=16)
-        if args.seen_filter == "cuckoo":
-            unseen, _shards2, _ = filter_and_update_cuckoo(
-                cand, shards, n_shards, args.cuckoo_buckets, persist=False
-            )
-        else:
-            unseen, _shards2, _ = filter_and_update(
-                cand, shards, n_shards, m_bits, persist=False
-            )
+        unseen, _shards2, _ = filter_and_update(
+            cand, shards, n_shards, m_bits, persist=False
+        )
         return unseen
 
     def frontier_action():
@@ -215,7 +194,6 @@ def main() -> None:
                 "master": args.master or f"local[{cores}]",
                 "cores": cores,
                 "pages": n_pages,
-                "seen_filter": args.seen_filter,
                 "extract_sec": round(t_extract, 2),
                 "extract_runs": [round(x, 2) for x in extract_runs],
                 "docs_per_sec": round(n_pages / t_extract, 1),

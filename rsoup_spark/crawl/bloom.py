@@ -119,44 +119,6 @@ def empty_shards(spark, n_shards: int, m_bits: int) -> DataFrame:
     return spark.createDataFrame(rows, SHARD_SCHEMA)
 
 
-def shard_row_placeholders(schema: StructType) -> dict:
-    """A non-null stand-in value per candidate column, for the one
-    shard-state row a shard pass emits next to its candidate rows (that
-    row is filtered out of the candidate output by its ``__blob``)."""
-    zero = {IntegerType: 0, LongType: 0, ShortType: 0, ByteType: 0,
-            DoubleType: 0.0, FloatType: 0.0, BooleanType: False,
-            StringType: "", BinaryType: b""}
-    return {f.name: zero.get(type(f.dataType)) for f in schema.fields}
-
-
-def shard_pass_schema(candidates: StructType, state: list) -> StructType:
-    """Output schema of a shard pass: the candidate columns, the
-    ``__unseen`` flag, and the nullable shard-state columns ``state``
-    (set only on the shard row).  A candidate column with no
-    placeholder value becomes nullable."""
-    ph = shard_row_placeholders(candidates)
-    return StructType(
-        [
-            StructField(f.name, f.dataType, f.nullable or ph[f.name] is None)
-            for f in candidates.fields
-        ]
-        + [StructField("__unseen", IntegerType(), False)]
-        + [StructField(name, t, True) for name, t in state]
-    )
-
-
-def with_shard_row(out: pd.DataFrame, key, placeholders: dict,
-                   state: dict) -> pd.DataFrame:
-    """Candidate rows ``out`` (state columns null) plus the shard's
-    state row.  State columns are object dtype (values or None), so a
-    64-bit count never passes through float64."""
-    for name in state:
-        out[name] = pd.Series([None] * len(out), dtype=object,
-                              index=out.index)
-    row = {**placeholders, "shard_id": int(key[0]), "__unseen": 0, **state}
-    return pd.concat([out, pd.DataFrame([row])], ignore_index=True)
-
-
 def filter_and_update(
     candidates: DataFrame,
     shards: DataFrame,
@@ -164,8 +126,6 @@ def filter_and_update(
     m_bits: int,
     k: int = 5,
     persist: bool = True,
-    dedup_key: str | None = None,
-    dedup_agg: dict | None = None,
     added: Observation | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame | None]:
     """One pass per shard: test candidates against the shard's Bloom,
@@ -185,31 +145,33 @@ def filter_and_update(
     ``added``, the plan of ``new_shards`` records the number of
     candidates inserted (``added``) when it runs.
 
-    When ``dedup_key`` is set, within-batch deduplication happens
-    *inside* the shard pass (pandas groupby per shard) -- valid because
-    equal keys always land in the same shard -- saving the upstream
-    ``groupBy(url)`` shuffle; ``dedup_agg`` maps column -> pandas agg
-    ('min'/'max'/'first') for the surviving row.  Without it, callers
-    must pre-deduplicate (duplicate keys in one batch would all read
-    as unseen, since bits are set after the whole batch is tested).
+    Callers must pre-deduplicate: duplicate keys in one batch would all
+    read as unseen, since bits are set after the whole batch is tested.
     """
-    state = [("__blob", BinaryType()), ("__n_items", LongType()),
-             ("__added", LongType())]
-    out_schema = shard_pass_schema(candidates.schema, state)
-    placeholders = shard_row_placeholders(candidates.schema)
-    cand_cols = [f.name for f in candidates.schema.fields]
+    cand_fields = candidates.schema.fields
+    cand_cols = [f.name for f in cand_fields]
+    # the shard's state row fills every candidate column with a
+    # non-null stand-in (it is told apart by its ``__blob``); a column
+    # with no stand-in becomes nullable.  The state columns are set
+    # only on that row.
+    zero = {IntegerType: 0, LongType: 0, ShortType: 0, ByteType: 0,
+            DoubleType: 0.0, FloatType: 0.0, BooleanType: False,
+            StringType: "", BinaryType: b""}
+    placeholders = {f.name: zero.get(type(f.dataType)) for f in cand_fields}
+    out_schema = StructType(
+        [
+            StructField(f.name, f.dataType,
+                        f.nullable or placeholders[f.name] is None)
+            for f in cand_fields
+        ]
+        + [StructField("__unseen", IntegerType(), False),
+           StructField("__blob", BinaryType(), True),
+           StructField("__n_items", LongType(), True),
+           StructField("__added", LongType(), True)]
+    )
 
     def process(key, cand_iter: pd.DataFrame, shard_pdf: pd.DataFrame):
         # cogroup gives all candidate rows + the (single) shard row
-        if dedup_key is not None and len(cand_iter):
-            agg = dict(dedup_agg or {})
-            for c in cand_cols:
-                if c != dedup_key and c not in agg:
-                    agg[c] = "first"
-            cand_iter = (
-                cand_iter.groupby(dedup_key, as_index=False, sort=True)
-                .agg(agg)[cand_cols]
-            )
         out = cand_iter[cand_cols].copy()
         out["__unseen"] = np.zeros(len(out), dtype="int32")
         if len(shard_pdf) == 0:
@@ -227,15 +189,18 @@ def filter_and_update(
             seen = _bit_test(blob, pos)
             _bit_set(blob, pos[~seen])
             out["__unseen"] = (~seen).astype("int32")
+        # state columns are object dtype (values or None), so a 64-bit
+        # count never passes through float64
+        out = out.assign(__blob=None, __n_items=None, __added=None)
         if len(shard_pdf) == 0:
-            return out.assign(__blob=None, __n_items=None, __added=None)
+            return out
         n_added = int(out["__unseen"].sum())
         old = shard_pdf.iloc[0]
-        return with_shard_row(out, key, placeholders, {
-            "__blob": old["bloom"] if blob is None else blob.tobytes(),
-            "__n_items": int(old["n_items"]) + n_added,
-            "__added": n_added,
-        })
+        row = {**placeholders, "shard_id": int(key[0]), "__unseen": 0,
+               "__blob": old["bloom"] if blob is None else blob.tobytes(),
+               "__n_items": int(old["n_items"]) + n_added,
+               "__added": n_added}
+        return pd.concat([out, pd.DataFrame([row])], ignore_index=True)
 
     grouped = candidates.groupBy("shard_id").cogroup(
         shards.groupBy("shard_id")

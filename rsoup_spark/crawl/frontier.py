@@ -37,6 +37,12 @@ crawl-order and seen-set equality are asserted in tests):
 7. new frontier entries: depth = min(parent depth)+1, score =
    max(parent score) * decay; frontier' = (allowed - scheduled) + new.
 
+TTL / recrawl (``CrawlEngine.expire``): Bloom bits are never cleared.
+An expired URL is appended to an ``expired`` event log, leaves the
+seen table through the last-add vs last-expiry anti-join, and is
+re-admitted by the exact backstop (its stale Bloom hits count as
+``bloom_false_positives``) -- so expiry needs ``exact_backstop``.
+
 Shuffle budget per round: one window shuffle on host (politeness), one
 repartition on shard_id (Bloom), one anti-join on url (backstop --
 dropped at production scale where the Bloom is authoritative), the
@@ -59,10 +65,11 @@ from pyspark.sql.types import StringType
 from pyspark.sql.window import Window
 
 from .bloom import empty_shards, filter_and_update, with_shard_cols
-from .cuckoo import empty_cuckoo_shards, filter_and_update_cuckoo
 from .statestore import ParquetStateStore
 
 DECAY = 0.85
+# raised by expire() and by a recrawl round when the backstop is off
+_NO_DELETE = "bloom cannot delete: expiry needs exact_backstop=True"
 
 
 @dataclass
@@ -71,15 +78,12 @@ class CrawlConfig:
     round_seconds: float = 10.0
     max_rounds: int = 50
     n_shards: int = 64
-    # which membership structure backs the URL-seen set (north_rule:
-    # "bloom/cuckoo").  Bloom: smallest bits/key, no deletion, FPs only.
-    # Cuckoo: supports deletion (TTL/recrawl), explicit capacity with
-    # observable insert failures (n_failed per shard), 2-bucket lookups.
-    seen_filter: str = "bloom"  # "bloom" | "cuckoo"
+    # the URL-seen set is a partitioned Bloom filter (crawl/bloom.py):
+    # n_shards blobs of m_bits bits, bloom_k probes per URL.  No
+    # deletion and no false negatives; its false positives are
+    # recovered by exact_backstop below
     m_bits: int = 1 << 20
     bloom_k: int = 5
-    cuckoo_buckets: int = 1 << 12  # power of two; 4 slots each
-    cuckoo_max_kicks: int = 500
     # frontier priority: "decay" = parent-score * DECAY (default);
     # "pagerank" = re-score the whole frontier each round from integer
     # PageRank over the discovered link graph (ops/graph.py).  Floor
@@ -90,8 +94,9 @@ class CrawlConfig:
     host_salt_shards: int = 4  # sub-split hot hosts inside shuffles
     # exact seen anti-join after the bloom prefilter: recovers bloom
     # false positives (urls the bloom wrongly claims seen would
-    # otherwise be silently lost).  At 10^10-url scale the bloom is
-    # authoritative and this is turned off (accepting fp-rate loss).
+    # otherwise be silently lost) and is what lets expire() recrawl.
+    # At 10^10-url scale the bloom is authoritative and this is turned
+    # off (accepting fp-rate loss; no expiry).
     exact_backstop: bool = True
     # coalesce per-round state writes locally (small rounds produce
     # 32 tiny files per table otherwise); None = natural partitioning
@@ -243,29 +248,8 @@ class CrawlEngine:
     def _path(self, round_no: int, name: str) -> str:
         return self.store.path(round_no, name)
 
-    # -- seen-filter dispatch (bloom | cuckoo, same cogroup contract) -------
-    def _empty_shards(self) -> DataFrame:
-        cfg = self.cfg
-        if cfg.seen_filter == "cuckoo":
-            return empty_cuckoo_shards(
-                self.spark, cfg.n_shards, cfg.cuckoo_buckets
-            )
-        return empty_shards(self.spark, cfg.n_shards, cfg.m_bits)
-
-    def _filter_update(self, cand: DataFrame, shards: DataFrame,
-                       persist: bool = True, added=None):
-        cfg = self.cfg
-        if cfg.seen_filter == "cuckoo":
-            return filter_and_update_cuckoo(
-                cand, shards, cfg.n_shards, cfg.cuckoo_buckets,
-                cfg.cuckoo_max_kicks, persist=persist, added=added,
-            )
-        return filter_and_update(
-            cand, shards, cfg.n_shards, cfg.m_bits, cfg.bloom_k,
-            persist=persist, added=added,
-        )
-
     def init_state(self, seeds: DataFrame) -> None:
+        cfg = self.cfg
         os.makedirs(self.ckpt, exist_ok=True)
         frontier = seeds.select(
             "url",
@@ -274,11 +258,12 @@ class CrawlEngine:
             "score",
         )
         # charge the seeds into the seen filter so rediscovered seeds dedup
-        seed_cand = with_shard_cols(frontier, "url", "host", self.cfg.n_shards)
-        _, shards, _ = self._filter_update(
-            seed_cand, self._empty_shards(), persist=False
+        seed_cand = with_shard_cols(frontier, "url", "host", cfg.n_shards)
+        _, shards, _ = filter_and_update(
+            seed_cand, empty_shards(self.spark, cfg.n_shards, cfg.m_bits),
+            cfg.n_shards, cfg.m_bits, cfg.bloom_k, persist=False,
         )
-        ckpt = _Checkpoint(self.store, 0, self.cfg.checkpoint_threads)
+        ckpt = _Checkpoint(self.store, 0, cfg.checkpoint_threads)
         try:
             ckpt.write(frontier, "frontier")
             # the seen set is append-only: round r's dir holds only the
@@ -328,25 +313,18 @@ class CrawlEngine:
         """Between-rounds maintenance: forget ``urls`` (one ``url``
         column) from the seen set so the crawler revisits them.
 
-        Mechanics per seen-filter backend:
-
-        * ``cuckoo`` -- the URLs' fingerprints are physically deleted
-          from the shards (partition-local cogroup pass), so recrawl
-          works even in the production backstop-off mode where the
-          filter is authoritative.
-        * ``bloom`` -- bits cannot be cleared, so expiry rides entirely
-          on the expired event log + the exact backstop anti-join; the
-          filter's stale 'seen' claims surface as recovered false
-          positives in the round metrics.  With the backstop off this
-          combination cannot recrawl, so it raises.
-
-        Either way the URL is appended to the ``expired`` log at the
-        current round (``_read_seen`` then applies last-add-wins vs
-        last-expiry-wins), and with ``reenqueue`` it re-enters the
-        frontier at depth 0 with ``score`` so the politeness scheduler
-        picks it up next round instead of waiting for organic
-        rediscovery.  Resumable like everything else: both writes land
-        in the current round's checkpoint before the method returns.
+        Bloom bits cannot be cleared, so expiry rides entirely on the
+        expired event log + the exact backstop anti-join: the URL is
+        appended to the ``expired`` log at the current round
+        (``_read_seen`` then applies last-add-wins vs last-expiry-wins),
+        and the filter's stale 'seen' claims surface as recovered false
+        positives in the round metrics.  With the backstop off nothing
+        could recrawl, so it raises.  With ``reenqueue`` the URL
+        re-enters the frontier at depth 0 with ``score`` so the
+        politeness scheduler picks it up next round instead of waiting
+        for organic rediscovery.  Resumable like everything else: both
+        writes land in the current round's checkpoint before the method
+        returns.
         """
         cfg = self.cfg
         if score is None:
@@ -359,15 +337,12 @@ class CrawlEngine:
                 if cfg.score_mode == "pagerank"
                 else 1.0
             )
-        if cfg.seen_filter == "bloom" and not cfg.exact_backstop:
-            raise ValueError(
-                "bloom cannot delete: expiry needs exact_backstop=True "
-                "or seen_filter='cuckoo'"
-            )
+        if not cfg.exact_backstop:
+            raise ValueError(_NO_DELETE)
         r, _ = self.last_round()
-        # persisted: the expired log, the shard deletion and the
-        # re-enqueue must see the same victims, also when ``urls`` is
-        # nondeterministic (a sample, an unordered limit)
+        # persisted: the expired log and the re-enqueue must see the
+        # same victims, also when ``urls`` is nondeterministic (a
+        # sample, an unordered limit)
         victims = urls.select(
             "url",
             F.regexp_extract("url", r"^https?://([^/]+)", 1).alias("host"),
@@ -376,23 +351,13 @@ class CrawlEngine:
         ckpt = _Checkpoint(self.store, r, cfg.checkpoint_threads)
         try:
             # the expired log first: it builds the victims cache, and a
-            # failed append stops the expiry before any fingerprint is
-            # deleted.  Append: several expire() calls can land in the
+            # failed append stops the expiry before the frontier is
+            # rewritten.  Append: several expire() calls can land in the
             # same round
             ckpt.write(
                 _observe_count(victims.select("url"), n_expired),
                 "expired", how="append",
             )()
-            # the rewrites land on separate paths: run them concurrently
-            if cfg.seen_filter == "cuckoo":
-                from .cuckoo import delete_and_update_cuckoo
-
-                shards = self.store.read(r, "shards")
-                vic = with_shard_cols(victims, "url", "host", cfg.n_shards)
-                ckpt.write(
-                    delete_and_update_cuckoo(vic, shards, cfg.cuckoo_buckets),
-                    "shards", how="rewrite",
-                )
             if reenqueue:
                 frontier = self.store.read(r, "frontier")
                 merged = (
@@ -448,8 +413,12 @@ class CrawlEngine:
         The other writes run concurrently."""
         cfg = self.cfg
         t0 = time.time()
-        # a recrawl round: an expiry is logged, so seen can lose URLs
+        # a recrawl round: an expiry is logged, so seen can lose URLs.
+        # Only the backstop re-admits them (a checkpoint expired with
+        # it on cannot resume with it off): refuse before any write
         recrawl = self.store.has_log("expired", r - 1)
+        if recrawl and not cfg.exact_backstop:
+            raise ValueError(_NO_DELETE)
         frontier = self.store.read(r - 1, "frontier")
         seen = self._read_seen(r - 1)
         shards = self.store.read(r - 1, "shards")
@@ -607,9 +576,9 @@ class CrawlEngine:
         )
 
         # per-URL aggregation in the JVM: map-side partial agg shrinks
-        # the shuffle ~8:1.  (Folding the dedup into the bloom pass via
-        # dedup_key was measured slower -- it feeds every raw
-        # contribution row through pandas.)
+        # the shuffle ~8:1.  (Folding the dedup into the bloom pass was
+        # measured slower -- it feeds every raw contribution row
+        # through pandas.)
         contrib = _observe_count(
             canon.groupBy("url")
             .agg(
@@ -624,11 +593,10 @@ class CrawlEngine:
         if recrawl:
             # recrawl path: an expired victim scheduled THIS round is
             # absent from round r-1's seen set, so a same-round link to
-            # it would re-admit it as "new" and crawl it twice (the
-            # cuckoo backend physically forgot its fingerprint, so the
-            # filter cannot catch it either).  This round's scheduled
-            # set is the missing piece of "seen as of now"; in a plain
-            # crawl scheduled ⊆ seen makes this anti-join a waste.
+            # it would re-admit it as "new" and crawl it twice.  This
+            # round's scheduled set is the missing piece of "seen as of
+            # now"; in a plain crawl scheduled ⊆ seen makes this
+            # anti-join a waste.
             contrib = contrib.join(scheduled.select("url"), "url",
                                    "left_anti")
         # two consumers: the seen filter pass and the backstop
@@ -645,9 +613,9 @@ class CrawlEngine:
         # set against seen, so new_urls is exact and the fp count is
         # observable as n_new - n_bloom_new (probably_new ⊆ new_urls).
         # With the backstop on, the pass feeds only the shards write.
-        probably_new, new_shards, bloom_cache = self._filter_update(
-            cand_new, shards, persist=not cfg.exact_backstop,
-            added=obs["bloom_new"],
+        probably_new, new_shards, bloom_cache = filter_and_update(
+            cand_new, shards, cfg.n_shards, cfg.m_bits, cfg.bloom_k,
+            persist=not cfg.exact_backstop, added=obs["bloom_new"],
         )
         rescheduled = None
         if cfg.exact_backstop:
@@ -678,27 +646,6 @@ class CrawlEngine:
             # accepted); the seen anti-join shuffle disappears (the pass
             # output is cached, so new_urls is a filter of it)
             new_urls = probably_new.select("url", "host", "depth", "score")
-            if recrawl:
-                rescheduled = scheduled.select("url").join(
-                    seen, "url", "left_anti"
-                )
-        if rescheduled is not None and cfg.seen_filter == "cuckoo":
-            # the victim's fingerprint was physically deleted by
-            # expire(), and the recrawl anti-join keeps it out of
-            # cand_new in its own scheduling round -- so in the
-            # production backstop-off mode, where the filter IS the
-            # seen set, a later-round link would re-admit it as
-            # probably_new and crawl it twice.  Re-insert the round's
-            # scheduled-but-unseen fingerprints (<= one batch of rows,
-            # recrawl rounds only).  Bloom needs no pass: its bits were
-            # never cleared.
-            resched_cand = with_shard_cols(
-                rescheduled.join(scheduled.select("url", "host"), "url"),
-                "url", "host", cfg.n_shards,
-            )
-            _, new_shards, _ = self._filter_update(
-                resched_cand, new_shards, persist=False
-            )
         # append-only seen: only this round's new (and, on recrawl
         # rounds, rescheduled) urls are written
         new_seen = _observe_count(new_urls, obs["new"]).select("url")
@@ -801,7 +748,6 @@ class CrawlEngine:
         n_new = _count(obs["new"])
         metrics = {
             "round": r,
-            "seen_filter": cfg.seen_filter,
             "n_candidates": int(cand_counts.get("candidates", 0)),
             "n_blocked": int(cand_counts.get("blocked", 0)),
             "n_scheduled": n_scheduled,
@@ -809,14 +755,9 @@ class CrawlEngine:
             "n_discovered": _count(obs["discovered"]),
             "n_bloom_new": n_bloom_new,
             "n_new": n_new,
-            # urls the seen filter wrongly claimed seen, recovered by
-            # the exact backstop (None when the backstop is off:
-            # without the exact join the loss is unobservable).  For
-            # the cuckoo filter a NEGATIVE value is possible in the
-            # overflow regime: a URL whose insert failed earlier reads
-            # unseen again when rediscovered (a false negative -> re-
-            # crawl, never a loss); shard n_failed makes that state
-            # observable directly.
+            # urls the bloom wrongly claimed seen, recovered by the
+            # exact backstop (None when the backstop is off: without
+            # the exact join the loss is unobservable)
             "bloom_false_positives": (
                 n_new - n_bloom_new if cfg.exact_backstop else None
             ),

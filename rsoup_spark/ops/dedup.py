@@ -696,11 +696,13 @@ def simhash_pairs(
     width = SIMHASH_BITS // k
     sh = simhash64(docs, id_col, text_col)
 
-    # no checkpoint: the planner does re-embed the simhash subtree into
-    # the window / broadcast-join-side / star branches (3 runs), but the
-    # vectorized stage is ~0.4s at sf0.1 and an eager checkpoint barrier
-    # measured exactly neutral (2.03s vs 2.04s) -- not worth losing the
-    # declarative plan.  Revisit if the signature stage grows.
+    # the signatures get no checkpoint of their own: with
+    # max_bucket_size set, _capped_bucket_pairs (materialize=True by
+    # default) local-checkpoints the sized bucket table built from
+    # them, so the simhash stage runs once, inside that checkpoint;
+    # with max_bucket_size=None both self-join sides re-run it (~0.4s
+    # at sf0.1).  A separate eager checkpoint of the signatures
+    # measured neutral (2.03s vs 2.04s).
     chunks = []
     for c in range(k):
         shift = c * width

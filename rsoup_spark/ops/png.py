@@ -21,7 +21,7 @@ touches (heavy decode at 100 TB belongs on a codec library anyway --
 this keeps the *dataflow* real end-to-end).
 
 All arithmetic stays in int64: np.uint64 % python-int silently
-promotes to float64 (see crawl/cuckoo.py for the same trap).
+promotes to float64.
 """
 
 from __future__ import annotations

@@ -17,12 +17,15 @@
 
 from __future__ import annotations
 
+import logging
 import math
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+log = logging.getLogger("rsoup_spark")
 
 
 def _dot(a, b):
@@ -631,6 +634,12 @@ def embedding_dup_pairs(
             # requested recall -- the docstring's "honest choice" made
             # automatic instead of silently keeping a capped (and
             # recall-lossy) table count
+            log.warning(
+                "embedding_dup_pairs: method='lsh' needs %d hash tables "
+                "at tau=%s with n_planes=%d, over MAX_LSH_TABLES=%d; "
+                "running the exact method='gemm' instead",
+                need, tau, n_planes, MAX_LSH_TABLES,
+            )
             method = "gemm"
         else:
             n_tables = need

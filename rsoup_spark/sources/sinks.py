@@ -1,10 +1,10 @@
 """Sinks (SURVEY.md §2.2): columnar table writes for extraction output
 and crawl state.
 
-Parquet is the sandbox sink; the production path is Iceberg
-(``df.writeTo(table).append()`` / MERGE INTO for the seen-set upsert),
-gated behind a capability probe since no Iceberg catalog jar ships in
-this container.  Layout decisions that matter at 100 TB:
+Parquet is the default sink; an ``iceberg:<table>`` target writes
+through ``df.writeTo(table).append()`` and needs the Iceberg runtime
+jars on the session (none ship with this package).  Layout decisions
+that matter at 100 TB:
 
 * ``tables_out`` partitions by host-hash bucket, not host -- hosts are
   wildly skewed, buckets are uniform, and table ids remain colocated
@@ -16,16 +16,8 @@ this container.  Layout decisions that matter at 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        impl = spark.conf.get("spark.sql.catalog.spark_catalog", "") or ""
-        return "iceberg" in impl.lower()
-    except Exception:
-        return False
 
 
 def write_tables(

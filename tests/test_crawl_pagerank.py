@@ -72,8 +72,7 @@ def test_pagerank_recrawl_matches_oracle(spark):
     robots = gen_robots(spark, n_hosts=4)
     seeds = gen_seeds(spark, n_hosts=4)
     cfg = CrawlConfig(batch_size=16, round_seconds=10.0, max_rounds=12,
-                      n_shards=8, seen_filter="cuckoo",
-                      cuckoo_buckets=1 << 10, score_mode="pagerank")
+                      n_shards=8, m_bits=1 << 16, score_mode="pagerank")
     tmp = tempfile.mkdtemp(prefix="crawl_pr_rc_")
     try:
         eng = CrawlEngine(spark, pages, robots, tmp, cfg)

@@ -200,6 +200,39 @@ def test_emb_dup_low_tau_falls_back_to_gemm(spark):
 
 
 @pytest.mark.spark
+def test_emb_dup_gemm_fallback_is_logged(spark, caplog):
+    """The LSH -> GEMM switch is never silent: one WARNING on the
+    library logger names tau, n_planes, the tables needed and the cap;
+    an LSH run within the cap logs nothing."""
+    import logging
+
+    from rsoup_spark.ops.similarity import (
+        MAX_LSH_TABLES,
+        _lsh_tables,
+        embedding_dup_pairs,
+    )
+
+    need = _lsh_tables(0.9, 12, 0.999)
+    assert need > MAX_LSH_TABLES
+    emb = spark.createDataFrame(
+        [(i, [float(i + 1)] * 64) for i in range(4)],
+        "vec_id long, embedding array<double>",
+    )
+    with caplog.at_level(logging.WARNING, logger="rsoup_spark"):
+        embedding_dup_pairs(emb, tau=0.9, n_planes=12)
+    rec = [r for r in caplog.records if r.name == "rsoup_spark"]
+    assert len(rec) == 1 and rec[0].levelno == logging.WARNING
+    msg = rec[0].getMessage()
+    for part in ("tau=0.9", "n_planes=12", f"needs {need} hash tables",
+                 f"MAX_LSH_TABLES={MAX_LSH_TABLES}", "method='gemm'"):
+        assert part in msg, msg
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger="rsoup_spark"):
+        embedding_dup_pairs(emb, tau=0.95, n_planes=12, materialize=False)
+    assert not [r for r in caplog.records if r.name == "rsoup_spark"]
+
+
+@pytest.mark.spark
 def test_decontaminate_broadcasts_eval_side(spark):
     """The deduped eval-gram side is broadcast-by-construction (eval
     sets are small by definition), not left to AQE statistics: the

@@ -1,14 +1,13 @@
 """TTL/recrawl expiry: forget seen URLs, revisit them, stay resumable.
 
 Covers the event-log seen semantics (last add vs last expiry), the
-physical cuckoo fingerprint deletion, the bloom+backstop logical path,
-and the unsupported bloom-authoritative combination.
+bloom+backstop logical path, the bloom-authoritative (backstop-off)
+crawl, and expiry refused wherever the backstop is off.
 """
 
 import shutil
 import tempfile
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -54,39 +53,19 @@ def _expire_and_resume(spark, eng, k=4):
 
 
 @pytest.mark.spark
-def test_cuckoo_expiry_recrawls(spark, web):
+def test_expiry_recrawls(spark, web):
     cfg = CrawlConfig(batch_size=16, max_rounds=14, n_shards=8,
-                      seen_filter="cuckoo", cuckoo_buckets=1 << 10)
-    tmp = tempfile.mkdtemp(prefix="recrawl_ck_")
+                      m_bits=1 << 16)
+    tmp = tempfile.mkdtemp(prefix="recrawl_ex_")
     try:
         eng = _run_to_done(spark, web, cfg, tmp)
-        n_before = sum(
-            r["n_items"]
-            for r in eng.store.read(eng.last_round()[0], "shards").collect()
+        shards_before = sorted(
+            eng.store.read(eng.last_round()[0], "shards").collect()
         )
         victims, r0 = _expire_and_resume(spark, eng)
-        # fingerprints physically deleted at the expiry checkpoint:
-        # n_items dropped by exactly the victim count
-        from rsoup_spark.crawl.bloom import with_shard_cols
-        from rsoup_spark.crawl.cuckoo import SLOTS, cuckoo_contains
-
-        shard_rows = eng.store.read(r0, "shards").collect()
-        # resume re-inserts rediscovered victims in later rounds, so
-        # assert against the round-r0 snapshot written by expire()
-        assert sum(r["n_items"] for r in shard_rows) == n_before - len(victims)
-        tables = {
-            r["shard_id"]: np.frombuffer(r["cuckoo"], np.uint16)
-            .reshape(-1, SLOTS)
-            for r in shard_rows
-        }
-        vic_df = spark.createDataFrame(
-            [(u, u.split("/")[2]) for u in victims], "url string, host string"
-        )
-        for row in with_shard_cols(
-            vic_df, "url", "host", cfg.n_shards
-        ).collect():
-            h = np.array([row["url_hash"]], np.int64)
-            assert not cuckoo_contains(tables[row["shard_id"]], h)[0], row
+        # bloom bits are never cleared: expire() leaves the round-r0
+        # shards exactly as the crawl wrote them
+        assert sorted(eng.store.read(r0, "shards").collect()) == shards_before
         # after the resumed crawl rediscovers them, they are seen again
         assert set(victims) <= eng.seen_set()
     finally:
@@ -172,7 +151,7 @@ def test_event_log_semantics(spark, web):
     """add -> expire -> re-add -> expire again: membership follows the
     latest event; double expiry is idempotent."""
     cfg = CrawlConfig(batch_size=16, max_rounds=14, n_shards=8,
-                      seen_filter="cuckoo", cuckoo_buckets=1 << 10)
+                      m_bits=1 << 16)
     tmp = tempfile.mkdtemp(prefix="recrawl_ev_")
     try:
         eng = _run_to_done(spark, web, cfg, tmp)
@@ -227,8 +206,7 @@ def test_rediscovered_victim_keeps_seed_priority(spark):
         [(f"{H}/a", 1.0, 0)], "url string, score double, depth int"
     )
     cfg = CrawlConfig(batch_size=16, round_seconds=1.0, max_rounds=10,
-                      n_shards=4, seen_filter="cuckoo",
-                      cuckoo_buckets=1 << 10, checkpoint_coalesce=1)
+                      n_shards=4, m_bits=1 << 16, checkpoint_coalesce=1)
     tmp = tempfile.mkdtemp(prefix="recrawl_pri_")
     try:
         eng = CrawlEngine(spark, pages, robots, tmp, cfg)
@@ -321,61 +299,63 @@ def test_two_expiries_at_cap_match_oracle_and_stay_bounded(spark):
 
 
 @pytest.mark.spark
-def test_cuckoo_backstop_off_no_double_crawl(spark):
-    """Production cuckoo mode (exact_backstop=False, the filter IS the
-    seen set): a rescheduled victim's fingerprint is re-inserted in its
-    scheduling round, so a LATER round's link to it cannot re-admit it
-    via probably_new -- order/seen match the oracle, no URL crawled
-    twice after the recrawl."""
-    from collections import Counter
-
+def test_bloom_authoritative_crawl_matches_oracle(spark, web):
+    """Production mode (exact_backstop=False, the Bloom IS the seen
+    set), sized so it has no false positives: order/seen match the
+    oracle, and the false-positive count is reported as unobservable
+    (None) rather than as 0."""
+    from rsoup_spark.crawl.fixtures import robots_rows
     from rsoup_spark.crawl.oracle import simulate
 
-    H = "https://h0.test"
-
-    def page(url, links):
-        body = "".join(f'<a href="{x}">x</a>' for x in links)
-        return (url, f"<html><body>{body}</body></html>")
-
-    graph = {
-        f"{H}/a": [f"{H}/b", f"{H}/c"],
-        f"{H}/b": [],
-        f"{H}/c": [f"{H}/b"],
-    }
-    pages = spark.createDataFrame(
-        [page(u, ls) for u, ls in graph.items()],
-        "url string, html string",
-    )
-    robots = spark.createDataFrame(
-        [("h0.test", ["/private"], 1.0)],
-        "host string, disallow_prefixes array<string>, crawl_delay double",
-    )
-    seeds = spark.createDataFrame(
-        [(f"{H}/a", 1.0, 0)], "url string, score double, depth int"
-    )
-    cfg = CrawlConfig(batch_size=1, round_seconds=1.0, max_rounds=10,
-                      n_shards=4, seen_filter="cuckoo",
-                      cuckoo_buckets=1 << 10, exact_backstop=False,
-                      checkpoint_coalesce=1)
-    tmp = tempfile.mkdtemp(prefix="recrawl_ckoff_")
+    pages, robots, seeds = web
+    cfg = CrawlConfig(batch_size=16, max_rounds=4, n_shards=8,
+                      m_bits=1 << 20, exact_backstop=False)
+    tmp = tempfile.mkdtemp(prefix="recrawl_auth_")
     try:
         eng = CrawlEngine(spark, pages, robots, tmp, cfg)
-        eng.run(seeds=seeds)
-        victims = [f"{H}/b", f"{H}/c"]
-        eng.expire(
-            spark.createDataFrame([(u,) for u in victims], "url string")
-        )
-        eng.run(resume=True)
+        history = eng.run(seeds=seeds)
+        graph = {
+            r["url"]: list(r["out_links"])
+            for r in pages.select("url", "out_links").collect()
+        }
         want_order, want_seen = simulate(
-            graph, [(f"{H}/a", 1.0, 0)],
-            [("h0.test", ["/private"], 1.0)],
-            batch_size=1, round_seconds=1.0, max_rounds=10,
-            expire_events=[victims],
+            graph,
+            [(r["url"], r["score"], r["depth"]) for r in seeds.collect()],
+            robots_rows(4),
+            batch_size=cfg.batch_size,
+            round_seconds=cfg.round_seconds,
+            max_rounds=cfg.max_rounds,
         )
         assert eng.crawl_order() == want_order
         assert eng.seen_set() == want_seen
-        post = [u for r, _k, u in eng.crawl_order() if r > 4]
-        assert max(Counter(post).values()) == 1, "victim crawled twice"
+        assert history
+        assert all(m["bloom_false_positives"] is None for m in history)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+@pytest.mark.spark
+def test_backstop_off_resume_after_expiry_raises(spark, web):
+    """A checkpoint expired with the backstop on cannot resume with it
+    off: only the backstop's anti-join re-admits the victims, so the
+    round refuses before it writes anything."""
+    pages, robots, seeds = web
+    cfg = CrawlConfig(batch_size=16, max_rounds=2, n_shards=8,
+                      m_bits=1 << 16)
+    tmp = tempfile.mkdtemp(prefix="recrawl_off_")
+    try:
+        eng = _run_to_done(spark, web, cfg, tmp)
+        victims = sorted(u for _r, _k, u in eng.crawl_order())[:2]
+        r0 = eng.expire(
+            spark.createDataFrame([(u,) for u in victims], "url string")
+        )["round"]
+        off = CrawlConfig(batch_size=16, max_rounds=2, n_shards=8,
+                          m_bits=1 << 16, exact_backstop=False)
+        resumed = CrawlEngine(spark, pages, robots, tmp, off)
+        with pytest.raises(ValueError, match="bloom cannot delete"):
+            resumed.run(resume=True)
+        assert resumed.last_round() == (r0, False)
+        assert not resumed.store.exists(r0 + 1, "order")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -386,8 +366,7 @@ def test_capped_resume_stays_capped_without_expiry(spark, web):
     on plain resume (no silent unbounded crawl); only a post-expiry
     resume extends the horizon."""
     cfg = CrawlConfig(batch_size=4, round_seconds=1.0, max_rounds=2,
-                      n_shards=8, seen_filter="cuckoo",
-                      cuckoo_buckets=1 << 10)
+                      n_shards=8, m_bits=1 << 16)
     tmp = tempfile.mkdtemp(prefix="recrawl_cap_")
     try:
         pages, robots, seeds = web
@@ -455,9 +434,9 @@ def test_fresh_engine_resumes_expiry_checkpoint(spark, web):
 @pytest.mark.spark
 def test_nondeterministic_expiry_input_is_read_once(spark, web):
     """expire() from a DataFrame that differs on every evaluation (a
-    random filter): the expired log, the cuckoo deletions and the
-    re-enqueue all see the same victims, and the resumed crawl matches
-    the oracle expiring exactly the logged URLs."""
+    random filter): the expired log and the re-enqueue see the same
+    victims, and the resumed crawl matches the oracle expiring exactly
+    the logged URLs."""
     import random
 
     from rsoup_spark.crawl.fixtures import robots_rows
@@ -465,14 +444,11 @@ def test_nondeterministic_expiry_input_is_read_once(spark, web):
 
     pages, robots, seeds = web
     cfg = CrawlConfig(batch_size=16, max_rounds=3, n_shards=8,
-                      seen_filter="cuckoo", cuckoo_buckets=1 << 10)
+                      m_bits=1 << 16)
     tmp = tempfile.mkdtemp(prefix="recrawl_rand_")
     try:
         eng = _run_to_done(spark, web, cfg, tmp)
         r0 = eng.last_round()[0]
-        n_before = sum(
-            r["n_items"] for r in eng.store.read(r0, "shards").collect()
-        )
         frontier_before = {
             r["url"] for r in eng.store.read(r0, "frontier").collect()
         }
@@ -481,9 +457,6 @@ def test_nondeterministic_expiry_input_is_read_once(spark, web):
         info = eng.expire(eng._read_seen(r0).where(coin("url")))
         expired = {r["url"] for r in eng.store.read(r0, "expired").collect()}
         assert expired and info["n_expired"] == len(expired)
-        # the shards lost exactly the logged fingerprints
-        shard_rows = eng.store.read(r0, "shards").collect()
-        assert sum(r["n_items"] for r in shard_rows) == n_before - len(expired)
         # the frontier gained exactly the logged URLs
         frontier = {
             r["url"] for r in eng.store.read(r0, "frontier").collect()
