@@ -68,15 +68,6 @@ def entry(spark: SparkSession) -> DataFrame:
 # helpers shared by several queries
 # ---------------------------------------------------------------------------
 
-@F.pandas_udf(StringType())
-def _canon_udf(href: pd.Series, base: pd.Series) -> pd.Series:
-    from rsoup_spark.functions.urlnorm import canonicalize_url
-
-    return pd.Series(
-        [canonicalize_url(h, b) or "" for h, b in zip(href, base)]
-    )
-
-
 def _spans_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = synth_html_docs(spark, sf_dir)
     spans = extract_spans(docs, "url", "html")
@@ -389,8 +380,9 @@ def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python worker pools per task with batch-synchronous JVM round
     trips (guide §4.1: control how many times data crosses the
     boundary).  Same rows: the loop replays links_from_spans' filter
-    (kind == 'a', media_ref != '') and ``_canon_udf``'s
-    ``canonicalize_url(href, src) or ''``."""
+    (kind == 'a', media_ref != '') and sets each link's canon_url to
+    ``canonicalize_url(href, src) or ''`` -- an href that does not
+    canonicalize keeps its row, with an empty canon_url."""
     docs = synth_html_docs(spark, sf_dir)
 
     def run(batches):

@@ -3,7 +3,11 @@ throughput on the same deterministic input at a given parallelism.
 
     spark-submit --master local[8]  bench_crawl.py
     spark-submit --master local[32] bench_crawl.py
-    # or: python bench_crawl.py --master local[8] --pages-total 60000
+    # or: python bench_crawl.py --master local[8] --pages 500 --repeat 1
+
+``--pages`` is the number of base pages per host (``--hosts`` hosts;
+the hot host gets ``--hot-factor`` times as many): ``--pages 500`` with
+the defaults generates 31 * 500 + 8 * 500 = 19,500 pages.
 
 Prints one JSON line: docs/sec (span extraction over the page store)
 and URLs/sec (harvest -> canonicalize -> politeness-rank -> Bloom-dedup,

@@ -58,16 +58,16 @@ import time
 from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass
 
-import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 from pyspark.sql.window import Window
 
 from .bloom import empty_shards, filter_and_update, with_shard_cols
 from .statestore import ParquetStateStore
 
 DECAY = 0.85
+# hot hosts are sub-split this many ways inside the politeness shuffle
+HOST_SALT_SHARDS = 4
 # raised by expire() and by a recrawl round when the backstop is off
 _NO_DELETE = "bloom cannot delete: expiry needs exact_backstop=True"
 
@@ -91,7 +91,6 @@ class CrawlConfig:
     # simulator reproduces the ordering bit-for-bit at any out-degree.
     score_mode: str = "decay"  # "decay" | "pagerank"
     pr_iters: int = 3
-    host_salt_shards: int = 4  # sub-split hot hosts inside shuffles
     # exact seen anti-join after the bloom prefilter: recovers bloom
     # false positives (urls the bloom wrongly claims seen would
     # otherwise be silently lost) and is what lets expire() recrawl.
@@ -113,13 +112,6 @@ class CrawlConfig:
     # table is bounded by site structure, never by page count.  Must
     # be set from init_state on (the counts log starts at round 1).
     template_budget: int | None = None
-    # overlap the round's checkpoint writes (frontier/seen/lineage/
-    # tpl_counts -> independent paths) with each other by submitting
-    # them as concurrent Spark jobs; the manifest -- the round's atomic
-    # commit point -- is still written only after every table write
-    # has completed, so the crash-consistency contract is unchanged.
-    # 1 = sequential.
-    checkpoint_threads: int = 4
 
 
 def _metrics(obs: Observation) -> dict:
@@ -141,15 +133,16 @@ def _observe_count(df: DataFrame, obs: Observation) -> DataFrame:
 
 
 class _Checkpoint:
-    """A checkpoint's state-table writes: submitted to a thread pool as
-    concurrent Spark jobs (``threads`` > 1) or run in order.  ``join``
-    waits for every write and re-raises the first failure; it MUST run
-    before write_manifest -- the manifest commits the round, so it
-    cannot observe a partially-written table on crash."""
+    """A checkpoint's state-table writes (frontier/seen/shards/lineage/
+    tpl_counts -> independent paths), submitted to a thread pool as
+    concurrent Spark jobs.  ``join`` waits for every write and
+    re-raises the first failure; it MUST run before write_manifest --
+    the manifest commits the round, so it cannot observe a
+    partially-written table on crash."""
 
-    def __init__(self, store, round_no: int, threads: int) -> None:
+    def __init__(self, store, round_no: int) -> None:
         self.store, self.round = store, round_no
-        self.pool = ThreadPoolExecutor(threads) if threads > 1 else None
+        self.pool = ThreadPoolExecutor(4)
         self.pending: list[Future] = []
 
     def _write(self, df: DataFrame, name: str, how: str) -> None:
@@ -162,9 +155,6 @@ class _Checkpoint:
         """Start writing ``df`` as table ``name`` (``how``: "overwrite",
         "append" or "rewrite"); returns a call that waits for this
         write (re-raising its failure)."""
-        if self.pool is None:
-            self._write(df, name, how)
-            return lambda: None
         fut = self.pool.submit(self._write, df, name, how)
         self.pending.append(fut)
         return fut.result
@@ -177,26 +167,7 @@ class _Checkpoint:
     def close(self) -> None:
         """Join or cancel every in-flight writer (also on failure, so a
         retry of the round cannot race orphaned writers)."""
-        if self.pool is not None:
-            self.pool.shutdown(wait=True, cancel_futures=True)
-
-
-def _canon_links(links: DataFrame) -> DataFrame:
-    """(src_url, href) -> (url, host): canonical http(s) targets."""
-
-    @F.pandas_udf(StringType())
-    def canon(href: pd.Series, base: pd.Series) -> pd.Series:
-        from ..functions.urlnorm import canonicalize_url
-
-        return pd.Series(
-            [canonicalize_url(h, b) or "" for h, b in zip(href, base)]
-        )
-
-    return (
-        links.select(canon("href", "src_url").alias("url"),
-                     F.col("src_url"))
-        .where(F.col("url") != "")
-    )
+        self.pool.shutdown(wait=True, cancel_futures=True)
 
 
 class CrawlEngine:
@@ -263,7 +234,7 @@ class CrawlEngine:
             seed_cand, empty_shards(self.spark, cfg.n_shards, cfg.m_bits),
             cfg.n_shards, cfg.m_bits, cfg.bloom_k, persist=False,
         )
-        ckpt = _Checkpoint(self.store, 0, cfg.checkpoint_threads)
+        ckpt = _Checkpoint(self.store, 0)
         try:
             ckpt.write(frontier, "frontier")
             # the seen set is append-only: round r's dir holds only the
@@ -348,7 +319,7 @@ class CrawlEngine:
             F.regexp_extract("url", r"^https?://([^/]+)", 1).alias("host"),
         ).persist()
         n_expired = Observation()
-        ckpt = _Checkpoint(self.store, r, cfg.checkpoint_threads)
+        ckpt = _Checkpoint(self.store, r)
         try:
             # the expired log first: it builds the victims cache, and a
             # failed append stops the expiry before the frontier is
@@ -395,7 +366,7 @@ class CrawlEngine:
     # -- one round -----------------------------------------------------------
     def run_round(self, r: int) -> dict:
         """Round r reads round r-1 state and writes round r state."""
-        ckpt = _Checkpoint(self.store, r, self.cfg.checkpoint_threads)
+        ckpt = _Checkpoint(self.store, r)
         try:
             return self._run_round(r, ckpt)
         finally:
@@ -523,7 +494,7 @@ class CrawlEngine:
         eligible = (
             admitted.withColumn(
                 "salt",
-                F.pmod(F.xxhash64("url"), F.lit(cfg.host_salt_shards)),
+                F.pmod(F.xxhash64("url"), F.lit(HOST_SALT_SHARDS)),
             )
             .withColumn("pre_rank", F.row_number().over(w1))
             .where(F.col("pre_rank") <= budget)
@@ -667,11 +638,8 @@ class CrawlEngine:
             # append this round's per-template schedule counts
             # (<= batch_size rows): the budget is consumed by actual
             # schedules only, so next round's fold sees exact usage
-            from .traps import url_template as _ut
-
-            _, tpl_expr_s, _ = _ut(F.col("url"))
             inc = (
-                scheduled.withColumn("template", tpl_expr_s)
+                scheduled.withColumn("template", tpl_expr)
                 .groupBy("host", "template")
                 .agg(F.count("*").cast("long").alias("n_scheduled"))
             )

@@ -731,13 +731,8 @@ def parse_document(html: str) -> Node:
 
     Uses the fast one-pass tokenizer; ``tests/test_dom_parsers.py``
     asserts tree equivalence with the stdlib ``html.parser`` build over
-    every reference fixture.  Set ``RSOUP_SPARK_STDLIB_PARSER=1`` to
-    force the stdlib path.
+    every reference fixture.
     """
-    import os
-
-    if os.environ.get("RSOUP_SPARK_STDLIB_PARSER"):
-        return parse_document_stdlib(html)
     return _fast_parse(html)
 
 

@@ -28,7 +28,7 @@ from ..functions.text import (
 )
 from pyspark.sql.types import StringType, StructField, StructType
 
-from .schemas import LINK_SCHEMA, SPANS_SCHEMA, TABLE_SCHEMA
+from .schemas import SPANS_SCHEMA, TABLE_SCHEMA
 
 # tags tracked when producing the interleaved spans column: headers,
 # list structure, and media/anchor tags on top of the inline default
@@ -227,34 +227,6 @@ def extract_tables(
     return docs.select(u_c, h_c).mapInPandas(run, TABLE_SCHEMA)
 
 
-def harvest_links(
-    docs: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
-    """docs -> (src_url, href, anchor_text): every <a href> in the doc.
-
-    This is the crawl-side link harvest (north_star: "extracted anchors
-    are canonicalized ... as vectorized pandas/Arrow UDFs over span
-    arrays").  Canonicalization happens downstream (frontier.py) so this
-    stage stays a pure extraction.
-    """
-    u_c, h_c = url_col, html_col
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            srcs, hrefs, texts = [], [], []
-            for url, html in zip(pdf[u_c], pdf[h_c]):
-                for span in spans_from_html(str(url), str(html)):
-                    if span["kind"] == "a" and span["media_ref"]:
-                        srcs.append(str(url))
-                        hrefs.append(span["media_ref"])
-                        texts.append(span["text"])
-            yield pd.DataFrame(
-                {"src_url": srcs, "href": hrefs, "anchor_text": texts}
-            )
-
-    return docs.select(u_c, h_c).mapInPandas(run, LINK_SCHEMA)
-
-
 def harvest_canonical_links(
     docs: DataFrame, url_col: str = "url", html_col: str = "html",
     keep: tuple[str, ...] = (),
@@ -321,9 +293,6 @@ def extract_text_v1(
     """docs(id, html, ...) -> (doc_id, text): whole-page rendered text
     via the legacy v1 algorithm (reference text/mod.rs:2,
     get_text_v1.rs:24-85).  Same Arrow-batch shape as extract_spans."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from ..functions.dom import parse_document
     from ..functions.text import get_text_v1
 
     id_c, html_c = id_col, html_col

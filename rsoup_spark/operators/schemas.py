@@ -92,11 +92,3 @@ TABLE_SCHEMA = StructType(
         StructField("n_cols", IntegerType(), False),
     ]
 )
-
-LINK_SCHEMA = StructType(
-    [
-        StructField("src_url", StringType(), False),
-        StructField("href", StringType(), False),
-        StructField("anchor_text", StringType(), False),
-    ]
-)

@@ -91,32 +91,24 @@ def jaccard_pairs(
     ngram: int = 1,
     threshold: float = 0.8,
     max_doc_freq: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """All unordered doc pairs with shingle-set Jaccard >= threshold.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard rounded to 6
     decimals for portable comparison.
 
-    ``materialize=True`` local-checkpoints the (doc_id, shingle-array)
-    table: the posting stream derived from it is consumed by up to
-    three subtrees (the df-cap count, and both self-join sides when
-    the planner's broadcast conversion duplicates them) and each
-    otherwise re-tokenizes the corpus.  Checkpointing the ARRAY table
-    (one row per doc) rather than the exploded posting stream keeps
-    the barrier cheap -- a posting-stream checkpoint was measured
-    SLOWER (4.96 -> 5.90s) while this one wins (4.06 -> 2.98s at
-    sf0.1).  Pass False to stay declarative (the checkpoint is
-    corpus-shaped, roughly tokenized-text-sized; on a cluster where
-    three codegen re-scans of the source are cheaper than
-    materializing that much, or executors are preemptible, the
-    declarative form is the right call)."""
+    The (doc_id, shingle-array) table is local-checkpointed: the
+    posting stream derived from it is consumed by up to three subtrees
+    (the df-cap count, and both self-join sides when the planner's
+    broadcast conversion duplicates them) and each otherwise
+    re-tokenizes the corpus.  Checkpointing the ARRAY table (one row
+    per doc) rather than the exploded posting stream keeps the barrier
+    cheap -- a posting-stream checkpoint was measured SLOWER
+    (4.96 -> 5.90s) while this one wins (4.06 -> 2.98s at sf0.1)."""
     base = docs.select(
         F.col(id_col).alias("doc_id"),
         _shingles(F.col(text_col), ngram).alias("shingles"),
-    )
-    if materialize:
-        base = base.localCheckpoint()
+    ).localCheckpoint()
     # carry the full (pre-cap) shingle-set size on each posting row: +8
     # bytes per row in the shuffle buys away two doc-id joins afterwards
     # (a sizes side-table is one row per doc -- not broadcastable at 1e9
@@ -223,7 +215,6 @@ def _capped_bucket_pairs(
     key_cols: list,
     max_bucket_size: int | None,
     payload: str | None = None,
-    materialize: bool = True,
 ):
     """Self-join candidate pairs within buckets, with hot buckets
     (> ``max_bucket_size`` rows) collapsed to a star on the bucket's
@@ -256,13 +247,11 @@ def _capped_bucket_pairs(
         # Window nodes in the un-materialized plan, no ReusedExchange).
         # One eager checkpoint computes it once; the table is skinny
         # (ids + band keys + size), bands x corpus rows.
-        # materialize=False keeps the declarative single-window shape
-        # (plan-asserted in tests).
-        sized = buckets.withColumn(
-            "__bsz", F.count("*").over(w)
-        ).withColumn("__rep", rep_struct)
-        if materialize:
-            sized = sized.localCheckpoint()
+        sized = (
+            buckets.withColumn("__bsz", F.count("*").over(w))
+            .withColumn("__rep", rep_struct)
+            .localCheckpoint()
+        )
         ok = sized.where(F.col("__bsz") <= max_bucket_size).drop(
             "__bsz", "__rep"
         )
@@ -697,12 +686,11 @@ def simhash_pairs(
     sh = simhash64(docs, id_col, text_col)
 
     # the signatures get no checkpoint of their own: with
-    # max_bucket_size set, _capped_bucket_pairs (materialize=True by
-    # default) local-checkpoints the sized bucket table built from
-    # them, so the simhash stage runs once, inside that checkpoint;
-    # with max_bucket_size=None both self-join sides re-run it (~0.4s
-    # at sf0.1).  A separate eager checkpoint of the signatures
-    # measured neutral (2.03s vs 2.04s).
+    # max_bucket_size set, _capped_bucket_pairs local-checkpoints the
+    # sized bucket table built from them, so the simhash stage runs
+    # once, inside that checkpoint; with max_bucket_size=None both
+    # self-join sides re-run it (~0.4s at sf0.1).  A separate eager
+    # checkpoint of the signatures measured neutral (2.03s vs 2.04s).
     chunks = []
     for c in range(k):
         shift = c * width

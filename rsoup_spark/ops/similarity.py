@@ -452,7 +452,6 @@ def semdedup(
     vec_col: str = "embedding",
     centroid_stride: int = 31,
     cell_cap: int = 1000,
-    materialize: bool = True,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic deduplication by
     clustering embeddings and pruning within-cluster near-duplicates.
@@ -480,14 +479,11 @@ def semdedup(
     ``max_cos`` its best within-cell similarity to a lower anchor.
 
     The assignment subtree is referenced three times (anchors, probe
-    side, final left join); with ``materialize=True`` (default) it is
-    computed ONCE and local-checkpointed -- the checkpoint both stops
-    the triple re-scan/re-assignment and truncates the (n_cells x dim
-    literal) expression tree out of the three downstream plans, which
-    otherwise pay its analysis/codegen three times.  Pass
-    ``materialize=False`` to keep the subtree declarative (e.g. when
-    the caller persisted upstream or executors are preemptible --
-    localCheckpoint is not fault-tolerant).
+    side, final left join), so it is computed ONCE and
+    local-checkpointed -- the checkpoint both stops the triple
+    re-scan/re-assignment and truncates the (n_cells x dim literal)
+    expression tree out of the three downstream plans, which otherwise
+    pay its analysis/codegen three times.
     """
     from pyspark.sql.window import Window
 
@@ -501,9 +497,7 @@ def semdedup(
     )
     assign = base.select(
         "vec_id", "v", "nv", cell_of("v", "nv")
-    )
-    if materialize:
-        assign = assign.localCheckpoint()
+    ).localCheckpoint()
     anchors = (
         assign.withColumn(
             "ar",
@@ -577,7 +571,6 @@ def embedding_dup_pairs(
     n_tables: int | None = None,
     dim: int = 64,
     target_recall: float = 0.999,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-duplicate vector pairs: cosine >= tau, id_a < id_b.
 
@@ -602,14 +595,11 @@ def embedding_dup_pairs(
     (measured 467k -> 65k candidates, rerank 3.5s -> 0.8s at sf0.1).
     The recall floor is still enforced by the auto-sizer at any value.
 
-    ``materialize=True`` local-checkpoints the (id, vector, norm)
-    projection and the (id, tbl, bucket) posting table, so the
-    signature GEMM runs ONCE (the bucket self-join otherwise re-embeds
-    -- and re-runs -- the ArrowEvalPython subtree on both sides) and
-    the vector table is scanned once instead of three times (sig +
-    both rerank sides).  Pass False to keep the plan declarative
-    (preemptible executors; or an iterating caller that persisted
-    upstream).
+    The LSH path local-checkpoints the (id, vector, norm) projection
+    and the (id, tbl, bucket) posting table, so the signature GEMM runs
+    ONCE (the bucket self-join otherwise re-embeds -- and re-runs --
+    the ArrowEvalPython subtree on both sides) and the vector table is
+    scanned once instead of three times (sig + both rerank sides).
 
     Exact methods (every pair scored; quadratic FLOPs, kept as the
     verification oracle for the LSH path and for low-tau use):
@@ -654,17 +644,13 @@ def embedding_dup_pairs(
             F.col(id_col).alias("id"),
             vd.alias("v"),
             _norm(vd).alias("nv"),
-        )
-        if materialize:
-            v = v.localCheckpoint()
+        ).localCheckpoint()
         # candidates carry ids only: the (id, tbl, bucket) rows shuffled
         # by the bucket join are ~16 bytes each, T copies per vector --
         # the vectors themselves move once, in the re-rank equi-joins
         sigd = v.select(
             "id", F.posexplode(sig(F.col("v"))).alias("tbl", "bucket")
-        )
-        if materialize:
-            sigd = sigd.localCheckpoint()
+        ).localCheckpoint()
         a = sigd.select(
             F.col("id").alias("id_a"), "tbl", "bucket"
         )

@@ -115,10 +115,7 @@ def get_spark(
         # shuffle stages collapse to few real tasks instead of one
         # micro-task per slot; scale-adaptive because the target is a
         # byte size, not a task count
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_PARALLELISM_FIRST", "false"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

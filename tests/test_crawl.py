@@ -40,12 +40,11 @@ def graph_of(pages):
 def test_harvest_matches_ground_truth(spark, web):
     """Extraction + canonicalization over the rendered HTML must equal
     the generator's canonical out_links (span-harvest fidelity)."""
-    from rsoup_spark.crawl.frontier import _canon_links
-    from rsoup_spark.operators.extract import harvest_links
+    from rsoup_spark.operators.extract import harvest_canonical_links
 
     pages, _, _ = web
     sample = pages.limit(30)
-    links = _canon_links(harvest_links(sample, "url", "html"))
+    links = harvest_canonical_links(sample, "url", "html")
     got = {}
     for r in links.collect():
         got.setdefault(r["src_url"], set()).add(r["url"])
@@ -183,12 +182,11 @@ def test_bloom_no_false_negatives():
 
 @pytest.mark.spark
 def test_manifest_commits_after_all_parallel_writes(spark, web):
-    """checkpoint_threads > 1 overlaps the per-round state writes; the
+    """The per-round state writes run concurrently; the
     crash-consistency contract is that the manifest (the round's
     atomic commit point) is written only after every table write has
     COMPLETED.  A recording store wrapper pins that ordering, and the
-    parallel run must stay byte-identical to the sequential one on
-    crawl order + seen set."""
+    crawl order + seen set must still equal the oracle's."""
     from rsoup_spark.crawl.statestore import ParquetStateStore
 
     events: list[tuple] = []
@@ -204,9 +202,8 @@ def test_manifest_commits_after_all_parallel_writes(spark, web):
             super().write_manifest(round_no, done, snapshot, horizon)
 
     cfg = CrawlConfig(batch_size=24, round_seconds=10.0, max_rounds=4,
-                      n_shards=16, m_bits=1 << 18, checkpoint_threads=4)
+                      n_shards=16, m_bits=1 << 18)
     tmp = tempfile.mkdtemp(prefix="crawl_par_")
-    tmp_seq = tempfile.mkdtemp(prefix="crawl_seq_")
     try:
         pages, robots, seeds = web
         store = RecordingStore(spark, tmp, coalesce=cfg.checkpoint_coalesce)
@@ -224,13 +221,15 @@ def test_manifest_commits_after_all_parallel_writes(spark, web):
             }
             assert names <= done_before, (r, done_before)
 
-        seq_cfg = CrawlConfig(batch_size=24, round_seconds=10.0,
-                              max_rounds=4, n_shards=16, m_bits=1 << 18,
-                              checkpoint_threads=1)
-        seq = CrawlEngine(spark, pages, robots, tmp_seq, seq_cfg)
-        seq.run(seeds=seeds)
-        assert eng.crawl_order() == seq.crawl_order()
-        assert eng.seen_set() == seq.seen_set()
+        want_order, want_seen = simulate(
+            graph_of(pages),
+            [(r["url"], r["score"], r["depth"]) for r in seeds.collect()],
+            robots_rows(6),
+            batch_size=cfg.batch_size,
+            round_seconds=cfg.round_seconds,
+            max_rounds=cfg.max_rounds,
+        )
+        assert eng.crawl_order() == want_order
+        assert eng.seen_set() == want_seen
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(tmp_seq, ignore_errors=True)

@@ -6,6 +6,25 @@ import pytest
 from tests.conftest import SF_SMALL
 
 
+def _record_checkpointed_plans(monkeypatch) -> list:
+    """Record the physical plan of every subtree local-checkpointed
+    from here on, taken just before the barrier materializes it: the
+    shape a declarative plan would have embedded downstream."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from rsoup_spark.plans.review import plan_text
+
+    plans = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(plan_text(self))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
+    return plans
+
+
 @pytest.mark.spark
 def test_no_row_at_a_time_python_anywhere(spark):
     """input_hint: vectorized UDFs only -- BatchEvalPython (per-row
@@ -81,15 +100,15 @@ def test_emb_dup_gemm_is_cogrouped_python(spark):
 
 
 @pytest.mark.spark
-def test_emb_dup_lsh_gate_is_bucketed(spark):
+def test_emb_dup_lsh_gate_is_bucketed(spark, monkeypatch):
     """The LSH default must be bucket-join shaped: one vectorized
     Arrow signature stage (ArrowEvalPython), no cogrouped all-pairs
-    scorer, no Cartesian anywhere.  Plan shape is asserted on the
-    declarative (materialize=False) form; the gate default
-    (materialize=True) eagerly checkpoints the signature table, so its
-    downstream plan shows checkpoint scans instead -- asserted too,
-    because that is exactly the point (the ArrowEvalPython subtree must
-    NOT be re-embedded into both sides of the bucket self-join)."""
+    scorer, no Cartesian anywhere.  The signature table is eagerly
+    checkpointed, so its shape is asserted on the checkpointed
+    subtree; the downstream plan shows checkpoint scans instead --
+    asserted too, because that is exactly the point (the
+    ArrowEvalPython subtree must NOT be re-embedded into both sides of
+    the bucket self-join)."""
     from pyspark.sql import functions as F
 
     import __spark_entry__ as e
@@ -99,11 +118,14 @@ def test_emb_dup_lsh_gate_is_bucketed(spark):
     emb = e.load_table(spark, SF_SMALL, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    plan = plan_text(embedding_dup_pairs(emb, tau=0.95, materialize=False))
-    assert "ArrowEvalPython" in plan
-    assert "FlatMapCoGroupsInPandas" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "CartesianProduct" not in plan
+    checkpointed = _record_checkpointed_plans(monkeypatch)
+    plan = plan_text(embedding_dup_pairs(emb, tau=0.95))
+    sig = [p for p in checkpointed if "ArrowEvalPython" in p]
+    assert len(sig) == 1, checkpointed
+    for p in (sig[0], plan):
+        assert "FlatMapCoGroupsInPandas" not in p
+        assert "BatchEvalPython" not in p
+        assert "CartesianProduct" not in p
     # gate default: the signature stage is materialized once -- no
     # Python evaluation (and no duplicated GEMM) left in the final plan
     plan_gate = plan_text(e.q_emb_dup_pairs(spark, SF_SMALL))
@@ -170,7 +192,7 @@ def test_pack_chunks_two_level_scan(spark):
 
 
 @pytest.mark.spark
-def test_emb_dup_low_tau_falls_back_to_gemm(spark):
+def test_emb_dup_low_tau_falls_back_to_gemm(spark, monkeypatch):
     """When the auto-sizer needs more than MAX_LSH_TABLES hash tables
     (tau too low for hyperplane buckets to discriminate at the target
     recall), method='lsh' must fall back to the exact blocked GEMM
@@ -188,15 +210,14 @@ def test_emb_dup_low_tau_falls_back_to_gemm(spark):
     plan = plan_text(embedding_dup_pairs(emb, tau=0.3, method="lsh"))
     assert "FlatMapCoGroupsInPandas" in plan  # the GEMM cogroup stage
     assert "CartesianProduct" not in plan
-    # an explicit n_tables still means what it says (no fallback);
-    # materialize=False keeps the signature stage visible in the plan
+    # an explicit n_tables still means what it says (no fallback): the
+    # checkpointed signature stage is the Arrow hyperplane UDF
+    checkpointed = _record_checkpointed_plans(monkeypatch)
     plan2 = plan_text(
-        embedding_dup_pairs(
-            emb, tau=0.3, method="lsh", n_tables=4, materialize=False
-        )
+        embedding_dup_pairs(emb, tau=0.3, method="lsh", n_tables=4)
     )
     assert "FlatMapCoGroupsInPandas" not in plan2
-    assert "ArrowEvalPython" in plan2
+    assert any("ArrowEvalPython" in p for p in checkpointed), checkpointed
 
 
 @pytest.mark.spark
@@ -228,7 +249,7 @@ def test_emb_dup_gemm_fallback_is_logged(spark, caplog):
         assert part in msg, msg
     caplog.clear()
     with caplog.at_level(logging.WARNING, logger="rsoup_spark"):
-        embedding_dup_pairs(emb, tau=0.95, n_planes=12, materialize=False)
+        embedding_dup_pairs(emb, tau=0.95, n_planes=12)
     assert not [r for r in caplog.records if r.name == "rsoup_spark"]
 
 
@@ -247,7 +268,7 @@ def test_decontaminate_broadcasts_eval_side(spark):
 
 
 @pytest.mark.spark
-def test_lsh_hot_bucket_cap_single_window_pass(spark):
+def test_lsh_hot_bucket_cap_single_window_pass(spark, monkeypatch):
     """The band-bucket cap must ride the self-join's own (band, key)
     partitioning: sizes/representatives come from a window over the
     bucket key -- no Python stage and no Cartesian product appear."""
@@ -266,17 +287,18 @@ def test_lsh_hot_bucket_cap_single_window_pass(spark):
     plan = plan_text(minhash_lsh_pairs(docs, max_bucket_size=100))
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
-    # declarative cap shape: sizes/representatives from ONE window over
-    # the bucket key, co-partitioned with the self-join
+    # cap shape, read from the checkpointed sized bucket table:
+    # sizes/representatives from ONE window over the bucket key,
+    # co-partitioned with the self-join
     buckets = _band_buckets(minhash_signatures(docs), 64, 16)
-    plan2 = plan_text(
-        _capped_bucket_pairs(
-            buckets, ["band", "key"], 100, materialize=False
-        )
-    )
+    checkpointed = _record_checkpointed_plans(monkeypatch)
+    plan2 = plan_text(_capped_bucket_pairs(buckets, ["band", "key"], 100))
+    assert len(checkpointed) == 1, checkpointed
+    sized = checkpointed[0]
+    assert "CartesianProduct" not in sized
     assert "CartesianProduct" not in plan2
-    assert "windowspecdefinition(band" in plan2
-    assert "hashpartitioning(band" in plan2
+    assert "windowspecdefinition(band" in sized
+    assert "hashpartitioning(band" in sized
 
 
 @pytest.mark.spark

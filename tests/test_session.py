@@ -33,3 +33,25 @@ def test_library_logger_is_silent_by_default():
 
     handlers = logging.getLogger("rsoup_spark").handlers
     assert any(isinstance(h, logging.NullHandler) for h in handlers)
+
+
+def test_only_the_session_reads_the_environment():
+    """Library behaviour is chosen by arguments, not by environment
+    switches: under rsoup_spark/, only session.py reads the environment
+    (deployment settings: CPUs, master, driver memory and the warm-up
+    opt-out)."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "rsoup_spark"
+    reads = re.compile(
+        r"\bos\.environ\b|\bgetenv\b|\bfrom os import\b.*\benviron\b"
+    )
+    offenders = []
+    for py in root.rglob("*.py"):
+        if py == root / "session.py":
+            continue
+        for i, line in enumerate(py.read_text().splitlines(), 1):
+            if reads.search(line):
+                offenders.append(f"{py.relative_to(root)}:{i}")
+    assert not offenders, offenders
